@@ -608,8 +608,6 @@ object Dedup {
       edges = next
       edgeSig = nextSig
       i += 1
-      if (sys.env.contains("GRAFT_DEBUG"))
-        System.err.println(s"[d06] round $i changed=$changed")
     }
     // Sever the result from every cache before returning: localCheckpoint
     // materializes the (small) component table from the still-warm

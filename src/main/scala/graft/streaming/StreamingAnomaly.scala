@@ -1,28 +1,21 @@
 package graft.streaming
 
 import graft.operators.AnomalyConfig
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import StreamRunner.{collect, pinStatePartitions, stagedStream}
 
 /** Structured Streaming operators (SURVEY.md §2D) — the streaming
   * rendering of the ticker pipeline, which is what the reference's
   * daily BigQuery batch becomes when run continuously.
   *
-  * Both run the events parquet through a real `readStream` →
-  * `writeStream` graph with a memory sink driven synchronously
-  * (`processAllAvailable`), so the driver can still collect a
-  * DataFrame; on a cluster the same code points at a Kafka/file
-  * source and a real sink.
-  *
-  * State sizing at 100 TB/day: st02/st06 state is bounded per key and
-  * evicted on watermark/timeout, but a feed with enough LIVE keys can
-  * still exceed executor heap — switch the store to RocksDB
-  * (`spark.sql.streaming.stateStore.providerClass` →
-  * `...state.RocksDBStateStoreProvider`, bundled with Spark) and size
-  * state-partition count via `withStatePartitions`; StreamingSpec
-  * proves output is byte-identical across providers.
+  * Every entry runs the events parquet through a real `readStream` →
+  * `writeStream` graph driven by [[StreamRunner]], which owns the state
+  * sizing and both sinks; the stateful detectors share one keyed-state
+  * prelude ([[keyed]]), so an entry here is its transform plus its
+  * output projection.
   */
 // Serializable: closures over this module's local defs (e.g. the
 // st30 update eta-expansion) capture MODULE$ as the lambda receiver;
@@ -37,121 +30,6 @@ object StreamingAnomaly extends Serializable {
     StructField("value", DoubleType),
     StructField("props", StringType)
   ))
-
-  private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Run `body` with the streaming state-partition count pinned to
-    * `n`, restoring the session's batch shuffle setting afterwards.
-    * The number of state stores per stateful operator is fixed at the
-    * query's first start from `spark.sql.shuffle.partitions`; batch
-    * sizing (one partition per core) is wrong for it — state commit
-    * cost scales with partition count, and on a cluster you size it to
-    * executors × state volume, not local cores.
-    */
-  /** Target state keys per state partition, calibrated on the sf10
-    * decade's two measured operating points (round 14): 7.5k keys ran
-    * clean on 8 partitions (the old hardcoded default), and 750k keys
-    * needed 64 (st17 128.6× at 8, 8.86× resized to 64). ceil(keys/12k)
-    * clamped to [8, 1024] reproduces both: sf0.1 → 8, 100× → 63.
-    */
-  private val KeysPerStatePartition = 12000L
-  /** Keyed on (dir, events-file mtime) so a dir whose data is
-    * re-staged or grows re-derives instead of pinning the first
-    * estimate for the JVM lifetime (round-15 verdict item 6); an
-    * all-sources-failed probe is NOT cached, so a later call against
-    * a dir whose tables appear afterwards re-derives too (round-15
-    * ADVICE).
-    */
-  private val keyEstCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
-
-  /** Streaming state-partition count — DERIVED from the source's key
-    * cardinality instead of a hardcoded 8 (round-14 verdict: the sf10
-    * probe proved the sizing law but the remedy was a manual env var).
-    * The number of state stores per stateful operator is frozen at
-    * the query's first start, so it must be sized before the stream
-    * runs: one approx_count_distinct scan of the batch events table
-    * estimates the per-(user, event_type) catalog — the dominant
-    * state-key axis of every stateful entry here — cached per dir so
-    * 40+ streaming entries pay it once per JVM. Results are
-    * key-deterministic and partition-count-invariant; this is a pure
-    * sizing knob. Precedence: SPARK_GRAFT_STATE_PARTITIONS env (the
-    * harness/operator override) > spark.graft.stream.statePartitions
-    * session conf (the cluster deployment knob) > the derived count.
-    * The 1024 clamp bounds tiny-batch commit overhead; a 1000-executor
-    * deployment with billions of live keys sizes via the conf.
-    */
-  private[graft] def statePartitions(s: SparkSession, dir: String): Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.toInt)
-      .orElse(s.conf.getOption("spark.graft.stream.statePartitions")
-        .map(_.toInt))
-      .getOrElse {
-        // estimate on whichever key axis the dir carries: ticker
-        // catalog for event streams, doc/vector cardinality for the
-        // corpus streams (spec dirs often stage ONE table — a missing
-        // parquet must fall through, not throw)
-        def est(f: => Long): Option[Long] =
-          try Some(f)
-          catch { case scala.util.control.NonFatal(_) => None }
-        def mtime(name: String): Long =
-          try new java.io.File(dir, name).lastModified()
-          catch { case scala.util.control.NonFatal(_) => 0L }
-        val cacheKey = (dir,
-          math.max(mtime("events.parquet"),
-            math.max(mtime("documents.parquet"),
-              mtime("embeddings.parquet"))))
-        // NB not computeIfAbsent: the probe must be cacheable-on-
-        // success-only, and a racing double probe is benign
-        val keys = if (keyEstCache.containsKey(cacheKey))
-          keyEstCache.get(cacheKey)
-        else {
-          val probed =
-            est(graft.Tables.events(s, dir)
-                .agg(approx_count_distinct(
-                  struct(col("user_id"), col("event_type"))).as("k"))
-                .head().getLong(0))
-              .orElse(est(graft.Tables.documents(s, dir)
-                .agg(approx_count_distinct(col("doc_id")).as("k"))
-                .head().getLong(0)))
-              .orElse(est(graft.Tables.embeddings(s, dir)
-                .agg(approx_count_distinct(col("vec_id")).as("k"))
-                .head().getLong(0)))
-          // cache only a successful probe: an all-failed dir (tables
-          // not yet staged) must re-derive on the next call
-          probed.foreach(k => keyEstCache.put(cacheKey, k))
-          probed.getOrElse(0L)
-        }
-        val derived = (keys + KeysPerStatePartition - 1) / KeysPerStatePartition
-        math.max(8L, math.min(1024L, derived)).toInt
-      }
-
-  /** Session-conf carrier for the derived count: written by
-    * [[eventStream]] (the one place every dir-scoped entry builds its
-    * source), read by the FromStream cores below, which receive a
-    * stream rather than a dir. Sticky by design — it describes the
-    * session's current source scale, and the next eventStream against
-    * another dir overwrites it.
-    */
-  private val DerivedStateConfKey =
-    "spark.graft.stream.statePartitions.derived"
-
-  /** The FromStream cores' sizing: env override > explicit session
-    * conf > the [[eventStream]]-derived count > the legacy 8 (spec
-    * entry points that hand-build a stream without a dir).
-    */
-  private def statePartitions(s: SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.toInt)
-      .orElse(s.conf.getOption("spark.graft.stream.statePartitions")
-        .map(_.toInt))
-      .orElse(s.conf.getOption(DerivedStateConfKey).map(_.toInt))
-      .getOrElse(8)
-
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
 
   /** Staging-layout version for the /tmp stream-stage caches: bump
     * whenever the staged BYTES for the same source dir can change
@@ -205,24 +83,17 @@ object StreamingAnomaly extends Serializable {
     // warm the state-partition key estimate here (one cached scan per
     // dir) so the harness's FIRST timed streaming entry measures its
     // operator, not the one-time derivation
-    statePartitions(s, dir)
+    pinStatePartitions(s, dir)
   }
 
   /** Events as a file stream over the staged µs copy. */
-  private def eventStream(s: SparkSession, dir: String): DataFrame = {
-    val staged = stageEvents(s, dir)
-    // pin the derived state sizing for the FromStream cores this
-    // source feeds — they receive a stream, not a dir, so the sizing
-    // travels via the session conf (see statePartitions(s))
-    s.conf.set(DerivedStateConfKey, statePartitions(s, dir).toString)
-    s.readStream.schema(eventSchema).parquet(staged.getAbsolutePath)
-  }
+  private def eventStream(s: SparkSession, dir: String): DataFrame =
+    stagedStream(s, dir, eventSchema, stageEvents(s, dir))
 
   /** st01: sliding-window aggregation with a watermark — events per
     * (6h window, event_type) with value sums.
     */
   def st01WindowAgg(s: SparkSession, dir: String): DataFrame = {
-    val name = s"st01_out_${counter.incrementAndGet()}"
     val agg = eventStream(s, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "6 hours", "3 hours"), col("event_type"))
@@ -231,15 +102,7 @@ object StreamingAnomaly extends Serializable {
     // Update mode: the watermark can evict closed windows (Complete
     // would pin every window forever); the staged source arrives as one
     // micro-batch so the memory table still holds each group once.
-    withStatePartitions(s, statePartitions(s, dir)) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Update)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+    collect(s, "st01", agg, OutputMode.Update)
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n_events"), col("sum_value"))
       .orderBy(col("win_start"), col("event_type"))
@@ -251,23 +114,15 @@ object StreamingAnomaly extends Serializable {
     * out of state instead of growing it forever).
     */
   def st03StreamDedup(s: SparkSession, dir: String): DataFrame = {
-    val name = s"st03_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s, dir)) {
-      val q = eventStream(s, dir)
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("user_id", "event_type", "value")
-        // project to the dedup key only: WHICH physical row survives
-        // depends on shuffle arrival order (nondeterministic across
-        // runs), but the surviving key set is exactly the distinct keys
-        .select(col("user_id"), col("event_type"), col("value"))
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name).orderBy(col("user_id"), col("event_type"), col("value"))
+    val dedup = eventStream(s, dir)
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("user_id", "event_type", "value")
+      // project to the dedup key only: WHICH physical row survives
+      // depends on shuffle arrival order (nondeterministic across
+      // runs), but the surviving key set is exactly the distinct keys
+      .select(col("user_id"), col("event_type"), col("value"))
+    collect(s, "st03", dedup)
+      .orderBy(col("user_id"), col("event_type"), col("value"))
   }
 
   /** st04: stream-stream interval join — click-to-purchase
@@ -278,7 +133,6 @@ object StreamingAnomaly extends Serializable {
     * are evicted).
     */
   def st04StreamStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    val name = s"st04_out_${counter.incrementAndGet()}"
     val purchases = eventStream(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("ts").as("purchase_ts"),
@@ -294,18 +148,9 @@ object StreamingAnomaly extends Serializable {
       col("user_id") === col("click_user") &&
         col("click_ts") <= col("purchase_ts") &&
         col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR"))
-    withStatePartitions(s, statePartitions(s, dir)) {
-      val q = joined
-        .select(col("purchase_id"), col("user_id"), col("purchase_ts"),
-          col("purchase_value"), col("click_id"), col("click_ts"))
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name).orderBy(col("purchase_id"), col("click_id"))
+      .select(col("purchase_id"), col("user_id"), col("purchase_ts"),
+        col("purchase_value"), col("click_id"), col("click_ts"))
+    collect(s, "st04", joined).orderBy(col("purchase_id"), col("click_id"))
   }
 
   /** st05: stream-static join — the streaming events enriched against
@@ -316,7 +161,6 @@ object StreamingAnomaly extends Serializable {
     * enrichment shape for a 100 TB/day event feed.
     */
   def st05StreamStaticJoin(s: SparkSession, dir: String): DataFrame = {
-    val name = s"st05_out_${counter.incrementAndGet()}"
     val dim = graft.Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val enriched = eventStream(s, dir)
@@ -325,15 +169,8 @@ object StreamingAnomaly extends Serializable {
       .groupBy(col("c_mktsegment"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(28,6)")).cast("double").as("sum_value"))
-    withStatePartitions(s, statePartitions(s, dir)) {
-      val q = enriched.writeStream
-        .outputMode(OutputMode.Update)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name).orderBy(col("c_mktsegment"), col("event_type"))
+    collect(s, "st05", enriched, OutputMode.Update)
+      .orderBy(col("c_mktsegment"), col("event_type"))
   }
 
   /** st06: streaming sessionization — `session_window` with a 30-min
@@ -344,32 +181,22 @@ object StreamingAnomaly extends Serializable {
     * length.
     */
   def st06SessionWindow(s: SparkSession, dir: String): DataFrame = {
-    val name = s"st06_out_${counter.incrementAndGet()}"
     // Session windows only support Append mode, which emits a session
     // when the watermark passes its end — so stage a copy of events
     // with one far-future sentinel row (user_id = -1). The sentinel
     // drags the watermark past every real session's end (the no-data
     // micro-batch after the file batch then flushes them all); its own
     // open session stays in state and is never emitted.
-    val staged = stageFlush(s, dir)
     // NOTE: the sentinel must reach the watermark node (do not filter
     // it stream-side) — its session simply never closes, so it never
     // reaches the sink; the batch-side filter below is belt-and-braces.
-    val agg = s.readStream.schema(eventSchema).parquet(staged.getAbsolutePath)
+    val agg = stagedStream(s, dir, eventSchema, stageFlush(s, dir))
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(28,6)")).cast("double")
           .as("session_value"))
-    withStatePartitions(s, statePartitions(s, dir)) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+    collect(s, "st06", agg)
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"), col("n_events"),
@@ -385,6 +212,38 @@ object StreamingAnomaly extends Serializable {
 
   case class TickEvent(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
       event_type: String, value: Double)
+
+  /** The stateful prelude of every event detector: the event columns,
+    * the 1 h watermark, events grouped by `key` and folded through
+    * `update` in Append mode.
+    */
+  private[streaming] def keyed[K: Encoder, S: Encoder, U: Encoder](
+      stream: DataFrame,
+      timeout: GroupStateTimeout = GroupStateTimeout.EventTimeTimeout)(
+      key: TickEvent => K)(
+      update: (K, Iterator[TickEvent], GroupState[S]) => Iterator[U])
+      : Dataset[U] = {
+    val spark = stream.sparkSession
+    import spark.implicits._
+    stream
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
+        col("value"))
+      .withWatermark("ts", "1 hour")
+      .as[TickEvent]
+      .groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Append, timeout)(update)
+  }
+
+  /** [[keyed]] per ticker: state keyed on (user_id, event_type). */
+  private[streaming] def perTicker[S: Encoder, U: Encoder](
+      stream: DataFrame,
+      timeout: GroupStateTimeout = GroupStateTimeout.EventTimeTimeout)(
+      update: ((Long, String), Iterator[TickEvent], GroupState[S])
+        => Iterator[U]): Dataset[U] = {
+    val spark = stream.sparkSession
+    import spark.implicits._
+    keyed(stream, timeout)(e => (e.user_id, e.event_type))(update)
+  }
 
   /** diffs is Array[Long], not List: the state encoder's primitive
     * fast path (UnsafeArrayData.fromPrimitiveArray) serializes it as
@@ -449,9 +308,9 @@ object StreamingAnomaly extends Serializable {
     st02FromStream(s, eventStream(s, dir), cfg, staleDays)
 
   /** The st02 stateful transform as a streaming Dataset — shared by
-    * the memory-sink collector below and the fault-tolerant file-sink
-    * runner (the memory sink cannot recover from a checkpoint, so the
-    * kill-and-restart path needs a real sink).
+    * the memory-sink collector below and the fault-tolerant
+    * [[StreamRunner.toFileSink]] (the memory sink cannot recover from a
+    * checkpoint, so the kill-and-restart path needs a real sink).
     */
   def st02Transform(s: SparkSession, stream: DataFrame,
       cfg: AnomalyConfig = AnomalyConfig(),
@@ -526,14 +385,7 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   /** Core of st02 over any streaming events frame (spec entry point for
@@ -541,20 +393,9 @@ object StreamingAnomaly extends Serializable {
     */
   def st02FromStream(s: SparkSession, stream: DataFrame,
       cfg: AnomalyConfig = AnomalyConfig(),
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st02_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st02Transform(s, stream, cfg, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st02", st02Transform(s, stream, cfg, staleDays))
       .orderBy(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-  }
 
   /** State-encoding format version, namespacing every durable
     * checkpoint location. The custom-state encodings are NOT
@@ -566,7 +407,7 @@ object StreamingAnomaly extends Serializable {
     * restore; old-version directories are dead data to clean up.
     */
   val StateFormatVersion = 2
-  private def versionedCheckpoint(checkpoint: String): String =
+  def versionedCheckpoint(checkpoint: String): String =
     s"$checkpoint/state-format-v$StateFormatVersion"
 
   /** The sink OUTPUT path is versioned in lockstep with the checkpoint:
@@ -575,36 +416,12 @@ object StreamingAnomaly extends Serializable {
     * committed in the output dir's _spark_metadata log — so an upgraded
     * run writing into the old output directory would silently drop its
     * first batches instead of restarting cleanly. Pairing the paths
-    * makes (checkpoint, output) one atomic versioned unit; the resolved
-    * path is returned so callers read the run's actual output.
+    * makes (checkpoint, output) one atomic versioned unit: stateful
+    * callers pass both to [[StreamRunner.toFileSink]] and read the
+    * versioned path back.
     */
-  private def versionedSink(path: String): String =
+  def versionedSink(path: String): String =
     s"$path/state-format-v$StateFormatVersion"
-
-  /** st02 into a fault-tolerant parquet file sink with a durable
-    * checkpointLocation: a later call with the same (path, checkpoint)
-    * RESUMES — offsets skip committed source files, the state store
-    * restores every ticker's rolling window, and the sink's file log
-    * keeps output exactly-once. This is the production kill-and-restart
-    * path; StreamingSpec proves resumed output equals a single run.
-    * Returns the version-resolved output path actually written.
-    */
-  def st02ToFileSink(s: SparkSession, stream: DataFrame, path: String,
-      checkpoint: String, cfg: AnomalyConfig = AnomalyConfig(),
-      staleDays: Double = 8.0): String = {
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st02Transform(s, stream, cfg, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", versionedSink(path))
-        .option("checkpointLocation", versionedCheckpoint(checkpoint))
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    versionedSink(path)
-  }
 
   /** Per-ticker streaming CUSUM state: O(1) per key — prefix moment
     * sums (exact fixed-point), the two CUSUM accumulators, last event
@@ -731,57 +548,17 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st09FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st09_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st09Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st09", st09Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("forecast"),
         col("resid"), col("holt_z6"), col("holt_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
-
-  /** st09 into a fault-tolerant parquet sink with a durable
-    * checkpoint — st02ToFileSink's kill-and-restart contract for the
-    * CUSTOM two-limb Holt state: a resume must restore every key's
-    * exact integer moments bit-for-bit, which StreamingSpec asserts by
-    * comparing a killed-and-resumed run against a single run.
-    */
-  def st09ToFileSink(s: SparkSession, stream: DataFrame, path: String,
-      checkpoint: String, staleDays: Double = 8.0): String = {
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st09Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", versionedSink(path))
-        .option("checkpointLocation", versionedCheckpoint(checkpoint))
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    versionedSink(path)
-  }
 
   /** st14 per-ticker streaming Kalman state: O(1) per key and the
     * SMALLEST in the stateful family — just the level and its
@@ -859,36 +636,7 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  /** st14 into a fault-tolerant parquet sink with a durable
-    * checkpoint — st09ToFileSink's kill-and-restart contract for the
-    * KalmanState encoding: a resume must restore every key's exact
-    * (level, variance) pair bit-for-bit, which StreamingSpec asserts
-    * by comparing a killed-and-resumed run against a single run.
-    */
-  def st14ToFileSink(s: SparkSession, stream: DataFrame, path: String,
-      checkpoint: String, staleDays: Double = 8.0): String = {
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st14Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", versionedSink(path))
-        .option("checkpointLocation", versionedCheckpoint(checkpoint))
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    versionedSink(path)
+    perTicker(stream)(update)
   }
 
   /** st15 per-ticker streaming trend state: the last `window`
@@ -981,61 +729,31 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st15FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0, window: Int = 16): DataFrame = {
-    val name = s"st15_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st15Transform(s, stream, staleDays, window)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0, window: Int = 16): DataFrame =
+    collect(s, "st15", st15Transform(s, stream, staleDays, window))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("n_window"),
         col("mk_s"), col("mk_tau6"), col("sen_slope_day"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st14FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st14_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st14Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st14", st14Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("level"),
         col("kgain6"), col("innovation"), col("kalman_z6"),
         col("kalman_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
-  def st08FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
+  def st08Transform(s: SparkSession, stream: DataFrame,
+      staleDays: Double = 8.0): org.apache.spark.sql.Dataset[CusumOut] = {
     import s.implicits._
-    val name = s"st08_out_${counter.incrementAndGet()}"
     val staleUs = (staleDays * 86400e6).toLong
     val staleMs = (staleDays * 86400e3).toLong
     val slack = 500000L // k = 0.5 sigma in 1e6 fixed point
@@ -1085,29 +803,17 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    withStatePartitions(s, statePartitions(s)) {
-      val q = stream
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-          col("value"))
-        .withWatermark("ts", "1 hour")
-        .as[TickEvent]
-        .groupByKey(e => (e.user_id, e.event_type))
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(update)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+    perTicker(stream)(update)
+  }
+
+  def st08FromStream(s: SparkSession, stream: DataFrame,
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st08", st08Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("zscore6"),
         col("cusum_pos"), col("cusum_neg"), col("changepoint_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   /** st10 SpaceSaving counter bank for one tumbling window: parallel
     * arrays (primitive encoders, TickerState's lesson), capacity-k
@@ -1195,14 +901,7 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (usOf(e.ts) / winUs) * winUs)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    keyed(stream)(e => (usOf(e.ts) / winUs) * winUs)(update)
   }
 
   /** st11 histogram state: 64 fixed long counters + total/min/max —
@@ -1289,50 +988,21 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.event_type, (usOf(e.ts) / winUs) * winUs))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    keyed(stream)(e => (e.event_type, (usOf(e.ts) / winUs) * winUs))(update)
   }
 
   def st11FromStream(s: SparkSession, stream: DataFrame,
-      buckets: Int = 64, domainMax: Double = 1000.0): DataFrame = {
-    val name = s"st11_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st11Transform(s, stream, buckets, domainMax)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      buckets: Int = 64, domainMax: Double = 1000.0): DataFrame =
+    collect(s, "st11", st11Transform(s, stream, buckets, domainMax))
       .orderBy(col("win_start"), col("event_type"))
-  }
 
   def st11StreamQuantiles(s: SparkSession, dir: String): DataFrame =
     st11FromStream(s, eventStream(s, dir))
 
   def st10FromStream(s: SparkSession, stream: DataFrame, k: Int = 16,
-      topN: Int = 5): DataFrame = {
-    val name = s"st10_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st10Transform(s, stream, k, topN)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      topN: Int = 5): DataFrame =
+    collect(s, "st10", st10Transform(s, stream, k, topN))
       .orderBy(col("win_start"), col("rank"))
-  }
 
   def st10HeavyHitters(s: SparkSession, dir: String): DataFrame =
     st10FromStream(s, eventStream(s, dir))
@@ -1428,31 +1098,13 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.event_type, (usOf(e.ts) / winUs) * winUs))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    keyed(stream)(e => (e.event_type, (usOf(e.ts) / winUs) * winUs))(update)
   }
 
   def st13FromStream(s: SparkSession, stream: DataFrame,
-      ref: Map[String, Array[Long]]): DataFrame = {
-    val name = s"st13_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st13Transform(s, stream, ref)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      ref: Map[String, Array[Long]]): DataFrame =
+    collect(s, "st13", st13Transform(s, stream, ref))
       .orderBy(col("win_start"), col("event_type"))
-  }
 
   def st13StreamDrift(s: SparkSession, dir: String): DataFrame =
     st13FromStream(s, eventStream(s, dir), st13Reference(s, dir))
@@ -1538,30 +1190,12 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.event_type, (usOf(e.ts) / winUs) * winUs))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    keyed(stream)(e => (e.event_type, (usOf(e.ts) / winUs) * winUs))(update)
   }
 
-  def st16FromStream(s: SparkSession, stream: DataFrame): DataFrame = {
-    val name = s"st16_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st16Transform(s, stream)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+  def st16FromStream(s: SparkSession, stream: DataFrame): DataFrame =
+    collect(s, "st16", st16Transform(s, stream))
       .orderBy(col("win_start"), col("event_type"))
-  }
 
   def st16StreamBenford(s: SparkSession, dir: String): DataFrame =
     st16FromStream(s, eventStream(s, dir))
@@ -1625,31 +1259,13 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e =>
-        (e.user_id, e.event_type, (usOf(e.ts) / dayUs) * dayUs))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    keyed(stream)(
+      e => (e.user_id, e.event_type, (usOf(e.ts) / dayUs) * dayUs))(update)
   }
 
-  def st23FromStream(s: SparkSession, stream: DataFrame): DataFrame = {
-    val name = s"st23_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st23Transform(s, stream)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+  def st23FromStream(s: SparkSession, stream: DataFrame): DataFrame =
+    collect(s, "st23", st23Transform(s, stream))
       .orderBy(col("win_start"), col("user_id"), col("event_type"))
-  }
 
   def st23StreamBars(s: SparkSession, dir: String): DataFrame =
     st23FromStream(s, eventStream(s, dir))
@@ -1673,7 +1289,6 @@ object StreamingAnomaly extends Serializable {
     * the composed q76 SQL).
     */
   def st24StreamScd2(s: SparkSession, dir: String): DataFrame = {
-    val name = s"st24_out_${counter.incrementAndGet()}"
     val dim = graft.operators.Relational.q76Scd2(s, dir)
       .select(col("o_custkey"), col("version"), col("status"),
         col("priority"), col("valid_from"), col("valid_to"))
@@ -1685,15 +1300,7 @@ object StreamingAnomaly extends Serializable {
           (col("valid_to").isNull || col("day") < col("valid_to")))
       .select(col("event_id"), col("user_id"), col("ts"),
         col("event_type"), col("version"), col("status"), col("priority"))
-    withStatePartitions(s, statePartitions(s, dir)) {
-      val q = enriched.writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name).orderBy(col("event_id"), col("version"))
+    collect(s, "st24", enriched).orderBy(col("event_id"), col("version"))
   }
 
   /** st17 per-ticker streaming Holt-Winters state: the dyadic
@@ -1794,62 +1401,20 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st17FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st17_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st17Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st17", st17Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("forecast"),
         col("resid"), col("season"), col("hw_z6"), col("hw_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st17StreamHoltWinters(s: SparkSession, dir: String): DataFrame =
     st17FromStream(s, eventStream(s, dir))
-
-  /** st17 into a fault-tolerant parquet sink with a durable
-    * checkpoint — the st02/st09/st14 kill-and-restart contract for
-    * the RING state class: a resume must restore every key's
-    * level/trend, all seven seasonal slots (including which phases
-    * are still unseen), the segment-local phase index and the prefix
-    * moments bit-for-bit — a mangled ring wrongs every forecast after
-    * the restart.
-    */
-  def st17ToFileSink(s: SparkSession, stream: DataFrame, path: String,
-      checkpoint: String, staleDays: Double = 8.0): String = {
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st17Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", versionedSink(path))
-        .option("checkpointLocation", versionedCheckpoint(checkpoint))
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    versionedSink(path)
-  }
 
   /** st18 per-ticker heartbeat state: ONLY the last event-time µs —
     * 8 bytes per live ticker, the smallest state in the family (st14
@@ -1911,35 +1476,17 @@ object StreamingAnomaly extends Serializable {
       out.result().iterator
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
+    perTicker(stream, GroupStateTimeout.NoTimeout)(update)
   }
 
   def st18FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st18_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st18Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st18", st18Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("gap_us"),
         col("gap_days6"), col("stale_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st18StreamGap(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -2009,35 +1556,17 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st19FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st19_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st19Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st19", st19Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("ph9"),
         col("ph_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st19StreamPageHinkley(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -2130,35 +1659,17 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st25FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st25_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st25Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st25", st25Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("vr6"),
         col("vr_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st25StreamVr(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -2264,35 +1775,17 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st31FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st31_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st31Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st31", st31Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("n_trans"),
         col("rho6"), col("adf_t6"), col("stationary_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st31StreamAdf(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -2358,31 +1851,13 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e =>
-        (e.user_id, e.event_type, (usOf(e.ts) / dayUs) * dayUs))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    keyed(stream)(
+      e => (e.user_id, e.event_type, (usOf(e.ts) / dayUs) * dayUs))(update)
   }
 
-  def st26FromStream(s: SparkSession, stream: DataFrame): DataFrame = {
-    val name = s"st26_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st26Transform(s, stream)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+  def st26FromStream(s: SparkSession, stream: DataFrame): DataFrame =
+    collect(s, "st26", st26Transform(s, stream))
       .orderBy(col("win_start"), col("user_id"), col("event_type"))
-  }
 
   def st26StreamTwap(s: SparkSession, dir: String): DataFrame =
     st26FromStream(s, eventStream(s, dir))
@@ -2470,36 +1945,18 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st21FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st21_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st21Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st21", st21Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("zscore6"),
         col("rule1"), col("rule2"), col("rule3"), col("rule4"),
         col("spc_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st21StreamSpc(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -2583,55 +2040,21 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st22FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st22_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st22Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st22", st22Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("ewma"),
         col("resid"), col("ewma_z6"), col("ewma_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st22StreamEwma(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
     st22FromStream(s, eventStream(s, dir), staleDays)
-
-  def st21ToFileSink(s: SparkSession, stream: DataFrame, path: String,
-      checkpoint: String, staleDays: Double = 8.0): String = {
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st21Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", versionedSink(path))
-        .option("checkpointLocation", versionedCheckpoint(checkpoint))
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    versionedSink(path)
-  }
 
   /** st20 per-user funnel state: the three stage timestamps (µs,
     * None = not reached). Deliberately no timeout and no staleness
@@ -2684,32 +2107,14 @@ object StreamingAnomaly extends Serializable {
       out.result().iterator
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
+    keyed(stream, GroupStateTimeout.NoTimeout)(_.user_id)(update)
   }
 
   def st20FromStream(s: SparkSession, stream: DataFrame,
-      stages: (String, String, String)): DataFrame = {
-    val name = s"st20_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st20Transform(s, stream, stages)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      stages: (String, String, String)): DataFrame =
+    collect(s, "st20", st20Transform(s, stream, stages))
       .select(col("user_id"), col("stage"), col("ts"))
       .orderBy(col("user_id"), col("stage"))
-  }
 
   def st20StreamFunnel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -2720,27 +2125,6 @@ object StreamingAnomaly extends Serializable {
       s"funnel needs 3 event types, got ${stages.length}")
     st20FromStream(s, eventStream(s, dir),
       (stages(0), stages(1), stages(2)))
-  }
-
-  /** st18 into a fault-tolerant parquet sink with a durable
-    * checkpoint — the family's kill-and-restart contract for the
-    * single-long heartbeat state: a resume must restore every key's
-    * exact last-seen µs, or the first post-restart gap is wrong.
-    */
-  def st18ToFileSink(s: SparkSession, stream: DataFrame, path: String,
-      checkpoint: String, staleDays: Double = 8.0): String = {
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st18Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", versionedSink(path))
-        .option("checkpointLocation", versionedCheckpoint(checkpoint))
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    versionedSink(path)
   }
 
   /** st27 per-ticker ensemble state: prefix moments (st08's exact
@@ -2849,36 +2233,18 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st27FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st27_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st27Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st27", st27Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("zscore6"),
         col("z_flag"), col("cusum_flag"), col("hampel_flag"),
         col("votes"), col("ensemble_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st27StreamEnsemble(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -2952,35 +2318,17 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st28FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st28_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st28Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st28", st28Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("macd4"),
         col("signal4"), col("hist4"), col("cross_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st28StreamMacd(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -3046,14 +2394,7 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    keyed(stream)(_.user_id)(update)
   }
 
   def st29FromStream(s: SparkSession, stream: DataFrame,
@@ -3065,17 +2406,7 @@ object StreamingAnomaly extends Serializable {
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
       .toMap
-    val name = s"st29_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st29Transform(s, stream, probs, rareBelow, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+    collect(s, "st29", st29Transform(s, stream, probs, rareBelow, staleDays))
       .select(col("user_id"), col("event_id"),
         col("ts").as("date_recorded"), col("from_type"), col("to_type"),
         col("p6"), col("rare_flag"))
@@ -3209,33 +2540,15 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st30FromStream(s: SparkSession, stream: DataFrame,
       cfg: AnomalyConfig = AnomalyConfig(),
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st30_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st30Transform(s, stream, cfg, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st30", st30Transform(s, stream, cfg, staleDays))
       .orderBy(col("user_id"), col("event_type"), col("start_ts"),
         col("end_ts"))
-  }
 
   def st30StreamIncidents(s: SparkSession, dir: String,
       cfg: AnomalyConfig = AnomalyConfig(),
@@ -3315,35 +2628,17 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st32FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st32_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st32Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st32", st32Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("n_obs"),
         col("n_turns"), col("tp_z6"), col("nonrandom_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st32StreamTurningPoints(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -3409,36 +2704,18 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st33FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st33_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st33Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st33", st33Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("peak"),
         col("drawdown"), col("dd_frac6"), col("underwater_run"),
         col("max_drawdown"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st33StreamDrawdown(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -3531,36 +2808,18 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st34FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st34_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st34Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st34", st34Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("gap_us"), col("n_gaps"),
         col("mean_gap_us"), col("sd_gap_us"), col("cv6"),
         col("burstiness6"), col("bursty_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st34StreamBurstiness(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -3668,37 +2927,19 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st35FromStream(s: SparkSession, stream: DataFrame,
       cfg: AnomalyConfig = AnomalyConfig(),
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st35_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st35Transform(s, stream, cfg, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st35", st35Transform(s, stream, cfg, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("anomaly"), col("n_obs"),
         col("n_alerts"), col("n_flips"), col("flip_rate6"),
         col("flapping_flag"), col("suppressed_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   /** st36 per-ticker extreme state: O(1) — last event time, count,
     * value sum, two-limb square sum, running min and max.
@@ -3779,35 +3020,17 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st36FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st36_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st36Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st36", st36Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("n_obs"),
         col("run_min"), col("run_max"), col("g6"), col("extreme_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st36StreamExtremes(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -3900,35 +3123,17 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st37FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0): DataFrame = {
-    val name = s"st37_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st37Transform(s, stream, staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0): DataFrame =
+    collect(s, "st37", st37Transform(s, stream, staleDays))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("n_scored"),
         col("mase6"), col("beats_naive_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st37StreamMase(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -4015,34 +3220,16 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    keyed(stream)(_.event_type)(update)
   }
 
   def st38FromStream(s: SparkSession, stream: DataFrame,
-      ref: Map[String, Array[Long]], staleDays: Double = 8.0): DataFrame = {
-    val name = s"st38_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st38Transform(s, stream, ref, staleDays = staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      ref: Map[String, Array[Long]], staleDays: Double = 8.0): DataFrame =
+    collect(s, "st38", st38Transform(s, stream, ref, staleDays = staleDays))
       .select(col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("n_seen"),
         col("psi9"), col("drift_flag"))
       .orderBy(col("event_type"), col("date_recorded"), col("event_id"))
-  }
 
   def st38StreamPsi(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -4129,54 +3316,19 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    stream
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .withWatermark("ts", "1 hour")
-      .as[TickEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    perTicker(stream)(update)
   }
 
   def st39FromStream(s: SparkSession, stream: DataFrame,
-      staleDays: Double = 8.0, window: Int = 16): DataFrame = {
-    val name = s"st39_out_${counter.incrementAndGet()}"
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st39Transform(s, stream, staleDays, window)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(name)
+      staleDays: Double = 8.0, window: Int = 16): DataFrame =
+    collect(s, "st39", st39Transform(s, stream, staleDays, window))
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("date_recorded"), col("value"), col("n_window"),
         col("rho6"), col("mono_flag"))
       .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
         col("event_id"))
-  }
 
   def st39StreamSpearman(s: SparkSession, dir: String,
       staleDays: Double = 8.0, window: Int = 16): DataFrame =
     st39FromStream(s, eventStream(s, dir), staleDays, window)
-
-  def st38ToFileSink(s: SparkSession, stream: DataFrame,
-      ref: Map[String, Array[Long]], path: String, checkpoint: String,
-      staleDays: Double = 8.0): String = {
-    withStatePartitions(s, statePartitions(s)) {
-      val q = st38Transform(s, stream, ref, staleDays = staleDays)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", versionedSink(path))
-        .option("checkpointLocation", versionedCheckpoint(checkpoint))
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    versionedSink(path)
-  }
 }

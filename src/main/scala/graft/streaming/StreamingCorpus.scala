@@ -5,7 +5,7 @@ import graft.dedup.Dedup
 import graft.text.TextFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import StreamRunner.{collect, stagedStream}
 
 /** st07: the corpus-prep pipeline (p01) as a STREAM — documents arrive
   * continuously, get language-ID'd, token-counted, and deduplicated on
@@ -22,8 +22,6 @@ import org.apache.spark.sql.streaming.OutputMode
   * carry a watermark (as st03 does); the staged corpus is bounded.
   */
 object StreamingCorpus {
-
-  private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** The driver's documents.parquet is a single file; the file stream
     * source needs a directory, so stage a copy once (gated on
@@ -47,33 +45,15 @@ object StreamingCorpus {
   }
 
   def st07StreamCorpus(s: SparkSession, dir: String): DataFrame = {
-    val name = s"st07_out_${counter.incrementAndGet()}"
-    val schema = Tables.documents(s, dir).schema
-    val staged = stageDocs(s, dir)
     val norm = Dedup.normText(col("text"))
-    // dedup state store count is fixed at first start from
-    // spark.sql.shuffle.partitions — size it for state volume, not
-    // batch core count (see StreamingAnomaly.withStatePartitions)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, StreamingAnomaly.statePartitions(s, dir).toString)
-    try {
-      val q = s.readStream
-        .schema(schema)
-        .parquet(staged.getAbsolutePath)
-        .select(
-          md5(norm).as("norm_hash"),
-          TextFns.predictedLangCol(col("text")).as("predicted_lang"),
-          TextFns.reTokensCol(col("text")).as("re_tokens"))
-        .dropDuplicates("norm_hash")
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally s.conf.set(key, prev)
-    s.table(name).orderBy(col("norm_hash"))
+    val dedup = stagedStream(s, dir, Tables.documents(s, dir).schema,
+        stageDocs(s, dir))
+      .select(
+        md5(norm).as("norm_hash"),
+        TextFns.predictedLangCol(col("text")).as("predicted_lang"),
+        TextFns.reTokensCol(col("text")).as("re_tokens"))
+      .dropDuplicates("norm_hash")
+    collect(s, "st07", dedup).orderBy(col("norm_hash"))
   }
 
   /** st12: streaming ADMISSION — d15's exact tier as the stream it is
@@ -99,33 +79,18 @@ object StreamingCorpus {
     * enter state), watermark-evictable on an unbounded feed (st03).
     */
   def st12StreamAdmission(s: SparkSession, dir: String): DataFrame = {
-    val name = s"st12_out_${counter.incrementAndGet()}"
-    val schema = Tables.documents(s, dir).schema
-    val staged = stageDocs(s, dir)
     val norm = Dedup.normText(col("text"))
     val index = Tables.documents(s, dir)
       .filter(col("doc_id") % 10 =!= 7)
       .select(md5(norm).as("norm_hash")).distinct()
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, StreamingAnomaly.statePartitions(s, dir).toString)
-    try {
-      val q = s.readStream
-        .schema(schema)
-        .parquet(staged.getAbsolutePath)
-        .filter(col("doc_id") % 10 === 7)
-        .select(md5(norm).as("norm_hash"),
-          TextFns.reTokensCol(col("text")).as("re_tokens"))
-        .join(index, Seq("norm_hash"), "left_anti")
-        .dropDuplicates("norm_hash")
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally s.conf.set(key, prev)
-    s.table(name).orderBy(col("norm_hash"))
+    val admitted = stagedStream(s, dir, Tables.documents(s, dir).schema,
+        stageDocs(s, dir))
+      .filter(col("doc_id") % 10 === 7)
+      .select(md5(norm).as("norm_hash"),
+        TextFns.reTokensCol(col("text")).as("re_tokens"))
+      .join(index, Seq("norm_hash"), "left_anti")
+      .dropDuplicates("norm_hash")
+    collect(s, "st12", admitted).orderBy(col("norm_hash"))
   }
 
   /** The embeddings table staged as a directory for the file stream
@@ -171,21 +136,14 @@ object StreamingCorpus {
     * subspace — the append shape the code lists consume.
     */
   def st40StreamVectorAdmit(s: SparkSession, dir: String): DataFrame = {
-    val name = s"st40_out_${counter.incrementAndGet()}"
     val schema = Tables.embeddings(s, dir).schema
     val staged = stageEmb(s, dir)
     val arrivals = s.readStream
       .schema(schema)
       .parquet(staged.getAbsolutePath)
       .filter(col("vec_id") % 10 === 7)
-    val q = st40Encode(s, dir, arrivals)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory").queryName(name)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    s.table(name).orderBy(col("vec_id"), col("m_idx"))
+    collect(s, "st40", st40Encode(s, dir, arrivals))
+      .orderBy(col("vec_id"), col("m_idx"))
   }
 
   /** The row-local encode transform (shared by the memory-sink entry
@@ -250,16 +208,6 @@ object StreamingCorpus {
     * StreamingSpec proves resumed output equals a single run.
     */
   def st40ToFileSink(s: SparkSession, dir: String, arrivals: DataFrame,
-      path: String, checkpoint: String): String = {
-    val q = st40Encode(s, dir, arrivals)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    path
-  }
+      path: String, checkpoint: String): String =
+    StreamRunner.toFileSink(s, st40Encode(s, dir, arrivals), path, checkpoint)
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamingAnomaly
+import graft.streaming.{StreamRunner, StreamingAnomaly, StreamingCorpus}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,16 +9,69 @@ class StreamingSpec extends AnyFunSuite {
   val dir = "/root/testdata/sf0.001"
 
   test("state partitions derive from source key cardinality " +
-      "(env > conf > derived, floor 8)") {
+      "(conf > derived > 8)") {
     // sf0.001 carries 75 (user, event_type) keys → ceil(75/12000) = 1,
-    // floored to 8 (the pre-round-15 hardcoded default's value)
-    assume(sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").isEmpty)
-    assert(StreamingAnomaly.statePartitions(spark, dir) == 8)
-    // the explicit session conf (the cluster deployment knob) wins
+    // floored to 8 (the pre-round-15 hardcoded default's value);
+    // ensureStaged pins the count derived for the dir
+    StreamingAnomaly.ensureStaged(spark, dir)
+    assert(StreamRunner.statePartitions(spark) == 8)
+    // the explicit session conf (the cluster deployment setting) wins
     // over the derivation
     spark.conf.set("spark.graft.stream.statePartitions", "16")
-    try assert(StreamingAnomaly.statePartitions(spark, dir) == 16)
+    try assert(StreamRunner.statePartitions(spark) == 16)
     finally spark.conf.unset("spark.graft.stream.statePartitions")
+  }
+
+  test("streaming entries restore the session's shuffle partitions " +
+      "after success and after a failed query") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    // a value no state sizing produces, so a leaked pin shows
+    spark.conf.set(key, "3")
+    try {
+      assert(StreamingAnomaly.st02StatefulFlags(spark, dir).count() > 0)
+      assert(spark.conf.get(key) == "3", "after st02StatefulFlags")
+      assert(StreamingCorpus.st07StreamCorpus(spark, dir).count() > 0)
+      assert(spark.conf.get(key) == "3", "after st07StreamCorpus")
+      // a stream missing the value column fails to plan
+      val noValue = slicedStream().drop("value")
+      intercept[org.apache.spark.sql.AnalysisException] {
+        StreamingAnomaly.st02FromStream(spark, noValue)
+      }
+      assert(spark.conf.get(key) == "3", "after a query that failed to plan")
+      // a file sink whose checkpoint location is a regular file fails
+      // inside the runner, after the state-partition pin
+      val cpFile = java.nio.file.Files.createTempFile("st02_cp", ".file")
+      val out = java.nio.file.Files.createTempDirectory("st02_fail_out")
+      intercept[Exception] {
+        StreamRunner.toFileSink(spark,
+          StreamingAnomaly.st02Transform(spark, slicedStream()),
+          out.toString, cpFile.toString)
+      }
+      assert(spark.conf.get(key) == "3", "after a query that failed to start")
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("only StreamRunner starts sinks and drives queries") {
+    import scala.jdk.CollectionConverters._
+    // per-detector drivers must not creep back into graft.streaming:
+    // the memory sink, the checkpointed sink and the synchronous drive
+    // each appear once, inside the runner, and the keyed-state prelude
+    // once, in StreamingAnomaly.keyed
+    val files = new java.io.File("src/main/scala/graft/streaming")
+      .listFiles().filter(_.getName.endsWith(".scala"))
+    val once = Seq(
+      "format(\"memory\")" -> "StreamRunner.scala",
+      ".option(\"checkpointLocation\"" -> "StreamRunner.scala",
+      "processAllAvailable()" -> "StreamRunner.scala",
+      ".flatMapGroupsWithState(" -> "StreamingAnomaly.scala")
+    for ((pat, home) <- once) {
+      val hits = files.toSeq.map { f =>
+        f.getName -> java.nio.file.Files.readAllLines(f.toPath).asScala
+          .count(_.contains(pat))
+      }.filter(_._2 > 0)
+      assert(hits == Seq(home -> 1), s"$pat: $hits")
+    }
   }
 
   test("st01 windowed agg totals match the batch count") {
@@ -81,6 +134,14 @@ class StreamingSpec extends AnyFunSuite {
     base
   }
 
+  /** A stateful transform into the versioned file sink: the
+    * kill-and-restart path the stateful detectors share.
+    */
+  private def fileSink(ds: org.apache.spark.sql.Dataset[_], out: String,
+      cp: String): String =
+    StreamRunner.toFileSink(spark, ds, StreamingAnomaly.versionedSink(out),
+      StreamingAnomaly.versionedCheckpoint(cp))
+
   private def slicedStream() =
     spark.readStream.schema(StreamingAnomaly.eventSchema)
       .option("maxFilesPerTrigger", "1")
@@ -117,7 +178,8 @@ class StreamingSpec extends AnyFunSuite {
     // run 1 sees the first two slices, commits them, and is stopped;
     // the sink method returns the version-resolved output directory
     addSlice(0); addSlice(1)
-    val written = StreamingAnomaly.st02ToFileSink(spark, stream(), outPath, cp)
+    val written =
+      fileSink(StreamingAnomaly.st02Transform(spark, stream()), outPath, cp)
     assert(written != outPath && written.startsWith(outPath),
       "sink path must be version-namespaced alongside the checkpoint")
     def sinkRows() = spark.read.parquet(written).collect().map(_.toString)
@@ -127,7 +189,7 @@ class StreamingSpec extends AnyFunSuite {
     // offsets skip the committed slices, the state store restores each
     // ticker's rolling window, the sink's file log keeps exactly-once
     addSlice(2); addSlice(3)
-    StreamingAnomaly.st02ToFileSink(spark, stream(), outPath, cp)
+    fileSink(StreamingAnomaly.st02Transform(spark, stream()), outPath, cp)
     val resumed = sinkRows().sorted
     assert(resumed.length > out1.length, "restart must process new slices")
     val single = StreamingAnomaly.st02StatefulFlags(spark, dir)
@@ -170,11 +232,11 @@ class StreamingSpec extends AnyFunSuite {
           .option("maxFilesPerTrigger", "1").parquet(inDir.getAbsolutePath)
         addSlice(0); addSlice(1)
         val written =
-          StreamingAnomaly.st09ToFileSink(spark, stream(), outPath, cp)
+          fileSink(StreamingAnomaly.st09Transform(spark, stream()), outPath, cp)
         val out1 = spark.read.parquet(written).count()
         assert(out1 > 0)
         addSlice(2); addSlice(3)
-        StreamingAnomaly.st09ToFileSink(spark, stream(), outPath, cp)
+        fileSink(StreamingAnomaly.st09Transform(spark, stream()), outPath, cp)
         val resumed = spark.read.parquet(written)
           .select(col("user_id"), col("event_type"), col("event_id"),
             col("ts").as("date_recorded"), col("value"), col("forecast"),
@@ -218,11 +280,11 @@ class StreamingSpec extends AnyFunSuite {
           .option("maxFilesPerTrigger", "1").parquet(inDir.getAbsolutePath)
         addSlice(0); addSlice(1)
         val written =
-          StreamingAnomaly.st17ToFileSink(spark, stream(), outPath, cp)
+          fileSink(StreamingAnomaly.st17Transform(spark, stream()), outPath, cp)
         val out1 = spark.read.parquet(written).count()
         assert(out1 > 0)
         addSlice(2); addSlice(3)
-        StreamingAnomaly.st17ToFileSink(spark, stream(), outPath, cp)
+        fileSink(StreamingAnomaly.st17Transform(spark, stream()), outPath, cp)
         val resumed = spark.read.parquet(written)
           .select(col("user_id"), col("event_type"), col("event_id"),
             col("ts").as("date_recorded"), col("value"), col("forecast"),
@@ -266,12 +328,13 @@ class StreamingSpec extends AnyFunSuite {
         def stream() = spark.readStream.schema(StreamingAnomaly.eventSchema)
           .option("maxFilesPerTrigger", "1").parquet(inDir.getAbsolutePath)
         addSlice(0); addSlice(1)
-        val written = StreamingAnomaly.st38ToFileSink(
-          spark, stream(), ref, outPath, cp)
+        val written = fileSink(
+          StreamingAnomaly.st38Transform(spark, stream(), ref), outPath, cp)
         val out1 = spark.read.parquet(written).count()
         assert(out1 > 0)
         addSlice(2); addSlice(3)
-        StreamingAnomaly.st38ToFileSink(spark, stream(), ref, outPath, cp)
+        fileSink(StreamingAnomaly.st38Transform(spark, stream(), ref),
+          outPath, cp)
         val resumed = spark.read.parquet(written)
           .select(col("event_type"), col("event_id"),
             col("ts").as("date_recorded"), col("value"), col("n_seen"),
@@ -461,11 +524,11 @@ class StreamingSpec extends AnyFunSuite {
           .option("maxFilesPerTrigger", "1").parquet(inDir.getAbsolutePath)
         addSlice(0); addSlice(1)
         val written =
-          StreamingAnomaly.st21ToFileSink(spark, stream(), outPath, cp)
+          fileSink(StreamingAnomaly.st21Transform(spark, stream()), outPath, cp)
         val out1 = spark.read.parquet(written).count()
         assert(out1 > 0)
         addSlice(2); addSlice(3)
-        StreamingAnomaly.st21ToFileSink(spark, stream(), outPath, cp)
+        fileSink(StreamingAnomaly.st21Transform(spark, stream()), outPath, cp)
         val resumed = spark.read.parquet(written)
           .select(col("user_id"), col("event_type"), col("event_id"),
             col("ts").as("date_recorded"), col("value"), col("zscore6"),
@@ -602,11 +665,11 @@ class StreamingSpec extends AnyFunSuite {
           .option("maxFilesPerTrigger", "1").parquet(inDir.getAbsolutePath)
         addSlice(0); addSlice(1)
         val written =
-          StreamingAnomaly.st14ToFileSink(spark, stream(), outPath, cp)
+          fileSink(StreamingAnomaly.st14Transform(spark, stream()), outPath, cp)
         val out1 = spark.read.parquet(written).count()
         assert(out1 > 0)
         addSlice(2); addSlice(3)
-        StreamingAnomaly.st14ToFileSink(spark, stream(), outPath, cp)
+        fileSink(StreamingAnomaly.st14Transform(spark, stream()), outPath, cp)
         val resumed = spark.read.parquet(written)
           .select(col("user_id"), col("event_type"), col("event_id"),
             col("ts").as("date_recorded"), col("value"), col("level"),
