@@ -28,20 +28,29 @@ case class AnomalyConfig(
   *
   * Scale design: every stage windows over the SAME partition key, so
   * Catalyst plans ONE hash-partition exchange for the whole chain —
-  * lag, rolling mean, row_number, per-key stats, islands and flags all
-  * run inside that single shuffle's partitions, sorted once. The dim
-  * join at the end is broadcast. No driver-side loops, no UDFs — all
-  * codegen'd built-ins.
+  * lag, rolling mean, row numbers, per-key stats, islands and flags all
+  * run inside that single shuffle's partitions. Every window from
+  * row_data through the z-score's running reset count also shares ONE
+  * order (`date_recorded`, `event_id`), so those stages run over a
+  * single sort in three window operators; the descending row number is
+  * derived from it (group count − ascending rank + 1) instead of
+  * re-sorting descending. The only other chain sort is the islands
+  * window's (its key adds `reset_reps_sum`), over at most
+  * `dataPeriods` rows per ticker. The dim join at the end is
+  * broadcast, and the report's final sort runs in one partition
+  * rather than behind a range exchange, whose sampling pass would
+  * compute the whole uncached chain a second time. No driver-side
+  * loops, no UDFs — all codegen'd built-ins.
   */
 object TickerAnomaly {
 
   private val keyCols = Seq(col("user_id"), col("event_type"))
 
+  /** The chain's one window order; `wAll` is its whole-ticker frame. */
   private def wAsc =
-    Window.partitionBy(keyCols: _*).orderBy(col("ts"), col("event_id"))
-  private def wDesc =
-    Window.partitionBy(keyCols: _*).orderBy(col("ts").desc, col("event_id").desc)
-  private def wKey = Window.partitionBy(keyCols: _*)
+    Window.partitionBy(keyCols: _*).orderBy(col("date_recorded"), col("event_id"))
+  private def wAll =
+    wAsc.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
   private def evalTsCol(cfg: AnomalyConfig): Column =
     lit(cfg.evalTs).cast("timestamp")
@@ -55,24 +64,30 @@ object TickerAnomaly {
   /** df-based stage entry so callers can pre-transform events (e.g.
     * fault injection, streaming micro-batches) and reuse the chain.
     */
-  def rowDataFrom(events: DataFrame, cfg: AnomalyConfig): DataFrame =
+  def rowDataFrom(events: DataFrame, cfg: AnomalyConfig): DataFrame = {
+    val n = count(lit(1)).over(wAll)
     events
       .filter(col("ts") <= evalTsCol(cfg))
+      .select(col("user_id"), col("event_type"), col("event_id"),
+        col("ts").as("date_recorded"), col("value"))
       .select(
         col("user_id"),
         col("event_type"),
         col("event_id"),
-        col("ts").as("date_recorded"),
-        lag(col("ts"), 1).over(wAsc).as("last_date"),
+        col("date_recorded"),
+        lag(col("date_recorded"), 1).over(wAsc).as("last_date"),
         evalTsCol(cfg).as("run_date"),
-        max(col("ts")).over(wKey).as("most_recent_date"),
-        row_number().over(wDesc).as("row_num"),
+        max(col("date_recorded")).over(wAll).as("most_recent_date"),
+        // row_number over (ts desc, event_id desc): that order is the
+        // exact reverse of wAsc, so no descending sort is needed
+        (n - row_number().over(wAsc) + 1).cast("int").as("row_num"),
         round(col("value"), 4).as("value"),
         round(lag(col("value"), 1).over(wAsc), 4).as("previous_value"),
         round(avg(col("value")).over(wAsc.rowsBetween(-7, -1)), 4)
-          .as("previous_seven_period_avg")
+          .as("previous_seven_period_avg"),
+        n.cast("int").as("max_row_num")
       )
-      .withColumn("max_row_num", max(col("row_num")).over(wKey))
+  }
 
   /** Stage 2 — `detrended_data` (sql:54-68): absolute one-period
     * difference + inter-arrival gap, keep the latest `dataPeriods`
@@ -101,10 +116,10 @@ object TickerAnomaly {
   def statsFrom(detrended: DataFrame, cfg: AnomalyConfig): DataFrame =
     detrended
       .withColumn("average",
-        round(avg(col("absolute_one_period_difference")).over(wKey), 4))
+        round(avg(col("absolute_one_period_difference")).over(wAll), 4))
       .withColumn("standard_deviation",
-        round(stddev_samp(col("absolute_one_period_difference")).over(wKey), 4))
-      .withColumn("avg_gap_us", avg(col("time_diff_us")).over(wKey))
+        round(stddev_samp(col("absolute_one_period_difference")).over(wAll), 4))
+      .withColumn("avg_gap_us", avg(col("time_diff_us")).over(wAll))
       .withColumn("repeated_values",
         when(col("absolute_one_period_difference") === 0, 1).otherwise(0))
       .withColumn("reset_count",
@@ -120,10 +135,7 @@ object TickerAnomaly {
     zscoredFrom(stats(s, dir, cfg), cfg)
 
   def zscoredFrom(stats: DataFrame, cfg: AnomalyConfig): DataFrame = {
-    val wCum = Window
-      .partitionBy(keyCols: _*)
-      .orderBy(col("date_recorded"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wCum = wAsc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     stats
       .withColumn("avg_days_bw_data", col("avg_gap_us") / lit(86400e6))
       .withColumn(
@@ -233,7 +245,11 @@ object TickerAnomaly {
         col("user_id"),
         col("event_type")
       )
-      .orderBy(
+      // one row per ticker, collected whole: a single-partition sort
+      // instead of orderBy's range exchange, whose sampling job would
+      // run the uncached window chain twice
+      .repartition(1)
+      .sortWithinPartitions(
         col("absolute_standard_deviations_from_avg").desc_nulls_last,
         col("date_recorded").desc,
         col("user_id"),
@@ -319,12 +335,10 @@ object TickerAnomaly {
     */
   def q103IncidentReport(s: SparkSession, dir: String,
       cfg: AnomalyConfig = AnomalyConfig()): DataFrame = {
-    val wAll = Window.partitionBy(col("user_id"), col("event_type"))
-      .orderBy(col("date_recorded"), col("event_id"))
     val isl = flags(s, dir, cfg)
-      .withColumn("rn_all", row_number().over(wAll))
+      .withColumn("rn_all", row_number().over(wAsc))
       .filter(col("anomaly") === 1)
-      .withColumn("grp", col("rn_all") - row_number().over(wAll))
+      .withColumn("grp", col("rn_all") - row_number().over(wAsc))
     isl.groupBy(col("user_id"), col("event_type"), col("grp"))
       .agg(
         min(col("date_recorded")).as("start_ts"),
@@ -372,19 +386,17 @@ object TickerAnomaly {
     * 1e-6-floored.
     *
     * Scale shape: rides the chain's ONE ticker exchange — the lag,
-    * the last-state rank and the groupBy all reuse it.
+    * the last-state rank and the groupBy all reuse it, and the rank is
+    * count − ascending rank + 1, so it shares the lag's sort.
     */
   def q126FlapDetection(s: SparkSession, dir: String,
       cfg: AnomalyConfig = AnomalyConfig()): DataFrame = {
-    val wAll = Window.partitionBy(col("user_id"), col("event_type"))
-      .orderBy(col("date_recorded"), col("event_id"))
-    val wDesc = Window.partitionBy(col("user_id"), col("event_type"))
-      .orderBy(col("date_recorded").desc, col("event_id").desc)
     val fl = flags(s, dir, cfg)
-      .withColumn("prev", lag(col("anomaly"), 1).over(wAll))
+      .withColumn("prev", lag(col("anomaly"), 1).over(wAsc))
       .withColumn("flip", when(col("prev").isNotNull &&
         col("anomaly") =!= col("prev"), 1L).otherwise(0L))
-      .withColumn("lrk", row_number().over(wDesc))
+      // descending rank as count − ascending rank + 1: no second sort
+      .withColumn("lrk", count(lit(1)).over(wAll) - row_number().over(wAsc) + 1)
     fl.groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("n_obs"),
         sum(col("anomaly")).cast("long").as("n_alerts"),

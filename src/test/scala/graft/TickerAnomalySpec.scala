@@ -1,8 +1,11 @@
 package graft
 
 import graft.operators.{AnomalyConfig, TickerAnomaly}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.exchange.{ShuffleExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.scalatest.funsuite.AnyFunSuite
 
 class TickerAnomalySpec extends AnyFunSuite {
@@ -73,6 +76,83 @@ class TickerAnomalySpec extends AnyFunSuite {
     assert(hashShuffles.size <= 1,
       s"expected one hash shuffle for the whole chain, got:\n$plan")
   }
+  test("report's executed plan: one hash exchange, no range exchange, " +
+      "at most three sorts") {
+    val df = TickerAnomaly.report(spark, dir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val walk = new AdaptiveSparkPlanHelper {}
+    val exchanges = walk.collect(plan) { case e: ShuffleExchangeLike => e }
+    val hash = exchanges.count(_.outputPartitioning.isInstanceOf[HashPartitioning])
+    val range = exchanges.count(_.outputPartitioning.isInstanceOf[RangePartitioning])
+    // the chain's sort, the islands window's sort and the final sort
+    val sorts = walk.collect(plan) { case s: SortExec => s }
+    assert(hash == 1, s"expected one hash exchange, got $hash:\n$plan")
+    assert(range == 0, s"expected no range exchange:\n$plan")
+    assert(sorts.size <= 3, s"expected at most 3 sorts, got ${sorts.size}:\n$plan")
+  }
+
+  test("row_num/max_row_num equal the descending row_number and group " +
+      "count under tied timestamps") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val t = (d: Int, h: Int) =>
+      java.sql.Timestamp.valueOf(f"2024-01-$d%02d $h%02d:00:00")
+    // timestamps repeat inside a ticker, event ids differ and run
+    // against time order; ticker (2, "a") shares ts values with (1, "a")
+    val rows = Seq(
+      Row(1L, "a", 10L, t(3, 0), 1.0), Row(1L, "a", 4L, t(3, 0), 2.0),
+      Row(1L, "a", 7L, t(3, 0), 3.0), Row(1L, "a", 2L, t(5, 6), 4.0),
+      Row(1L, "a", 9L, t(5, 6), 5.0), Row(1L, "a", 30L, t(1, 0), 6.0),
+      Row(1L, "b", 5L, t(2, 0), 7.0), Row(1L, "b", 3L, t(2, 0), 8.0),
+      Row(2L, "a", 8L, t(3, 0), 9.0), Row(2L, "a", 1L, t(9, 0), 1.5),
+      Row(2L, "a", 6L, t(9, 0), 2.5), Row(3L, "c", 11L, t(4, 0), 3.5))
+    val schema = StructType(Seq(
+      StructField("user_id", LongType), StructField("event_type", StringType),
+      StructField("event_id", LongType), StructField("ts", TimestampType),
+      StructField("value", DoubleType)))
+    val events = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 3), schema)
+    val key = Window.partitionBy("user_id", "event_type")
+    val expected = events
+      .select(col("event_id"),
+        row_number().over(key.orderBy(col("ts").desc, col("event_id").desc))
+          .as("rn"),
+        count(lit(1)).over(key).cast("int").as("n"))
+      .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2))).toMap
+    val got = TickerAnomaly.rowDataFrom(events, AnomalyConfig())
+      .select("event_id", "row_num", "max_row_num")
+    assert(got.schema("row_num").dataType == IntegerType)
+    assert(got.schema("max_row_num").dataType == IntegerType)
+    val actual = got.collect()
+      .map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2))).toMap
+    assert(actual == expected)
+  }
+
+  test("report rows are totally ordered by |z| desc, date desc, ticker") {
+    val keys = Seq("absolute_standard_deviations_from_avg", "date_recorded",
+      "user_id", "event_type")
+    for (sf <- Seq(dir, dir.replace("sf0.001", "sf0.01"))) {
+      val rows = TickerAnomaly.report(spark, sf).collect()
+        .map(r => Row.fromSeq(keys.map(k => r.get(r.fieldIndex(k)))))
+      assert(rows.length > 1, sf)
+      // < 0 when a sorts first: |z| desc nulls last, date desc, key asc
+      def cmp(a: Row, b: Row): Int = Seq(
+        if (a.isNullAt(0) || b.isNullAt(0))
+          java.lang.Boolean.compare(a.isNullAt(0), b.isNullAt(0))
+        else java.lang.Double.compare(b.getDouble(0), a.getDouble(0)),
+        b.getTimestamp(1).compareTo(a.getTimestamp(1)),
+        java.lang.Long.compare(a.getLong(2), b.getLong(2)),
+        a.getString(3).compareTo(b.getString(3))).find(_ != 0).getOrElse(0)
+      rows.sliding(2).foreach {
+        case Array(a, b) =>
+          assert(cmp(a, b) < 0, s"$sf: $a must sort strictly before $b")
+        case _ =>
+      }
+    }
+  }
+
   test("q103 incidents partition the flagged rows into maximal runs") {
     import org.apache.spark.sql.functions._
     val inc = TickerAnomaly.q103IncidentReport(spark, dir).collect()
