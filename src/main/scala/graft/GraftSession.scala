@@ -10,6 +10,16 @@ import org.apache.spark.sql.SparkSession
   * parallelism actually available, UTC session time, and a broadcast
   * threshold large enough that every dimension table in the star schema
   * broadcasts instead of shuffling.
+  *
+  * It also sizes Spark's generated-class cache. That cache is JVM-wide:
+  * `CodeGenerator` builds it once, from the
+  * `spark.sql.codegen.cache.maxEntries` of the session that first
+  * generates code, and later sessions cannot resize it. At Spark's
+  * default of 100 entries (LRU), one corpus operation (curate, near-dup
+  * pairs and SemDeDup plan ~120 distinct classes) evicts what its next
+  * call needs, and every call recompiles them. Every graft entry
+  * point (`Verify`, `Bench`, the specs, the `perfbench` harness) builds
+  * its session here, so the size set below is the one the JVM keeps.
   */
 object GraftSession {
   def builder(master: String = "local[32]"): SparkSession.Builder =
@@ -28,6 +38,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   def get(master: String = "local[32]"): SparkSession = {
     val s = builder(master).getOrCreate()

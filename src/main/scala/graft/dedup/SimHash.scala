@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** d03: SimHash near-duplicate detection.

@@ -2496,7 +2496,6 @@ object SignalOps {
   def q94CorrMatrix(s: SparkSession, dir: String,
       minDays: Int = 5): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val d19 = (c: Column) => c.cast("decimal(19,0)")
     val closes = dailyCloses(s, dir)
     // round-13 rewrite (q108/q129's posture): per-ticker day-sorted
     // close arrays, budget-gated pair join (PairPlan), the lag-0
@@ -3363,9 +3362,6 @@ object SignalOps {
   def q111Granger(s: SparkSession, dir: String,
       minDays: Int = 8): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val d19 = (c: Column) => c.cast("decimal(19,0)")
-    def prod(x: Column, y: Column): Column =
-      sum((d19(x) * d19(y)).cast("decimal(38,0)"))
     val closes = dailyCloses(s, dir)
     // round-13 rewrite (q94/q108/q129's posture): per-ticker
     // day-sorted close arrays, budget-gated pair join (PairPlan), the
@@ -3453,12 +3449,7 @@ object SignalOps {
   def q112Cointegration(s: SparkSession, dir: String,
       minDays: Int = 8): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val d19 = (c: Column) => c.cast("decimal(19,0)")
     val dd = (c: Column) => c.cast("double")
-    def prod(x: Column, y: Column): Column =
-      sum((d19(x) * d19(y)).cast("decimal(38,0)"))
-    def prodIf(g: Column, x: Column, y: Column): Column =
-      sum(when(g, (d19(x) * d19(y)).cast("decimal(38,0)")))
     val closes = dailyCloses(s, dir)
     // round-13 rewrite (q111's twin): budget-gated per-ticker-array
     // pair join (PairPlan) + the compiled PairLagMoments pass replace
@@ -4131,7 +4122,6 @@ object SignalOps {
     */
   def q120CvmDrift(s: SparkSession, dir: String): DataFrame = {
     val d19 = (c: Column) => c.cast("decimal(19,0)")
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val dd = (c: Column) => c.cast("double")
     val ev = Tables.events(s, dir)
       .select(col("event_type"), to_date(col("ts")).as("day"),
@@ -5407,7 +5397,6 @@ object SignalOps {
     */
   def s14FactorResidual(s: SparkSession, dir: String,
       iters: Int = 4, minObs: Int = 8): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val d19 = (c: Column) => c.cast("decimal(19,0)")
     val dd = (c: Column) => c.cast("double")
     val wDay = Window.partitionBy(col("user_id"), col("event_type"),

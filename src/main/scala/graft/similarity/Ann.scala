@@ -285,15 +285,19 @@ object Ann {
   /** One LITERAL (id, vector) bank, id-ascending, for the row-local
     * argmins below (st40's admission posture: an unrolled least()
     * over per-id structs blew the 64 KB codegen method limit; ONE
-    * aggregate() fold stays whole-stage-codegen'd).
+    * aggregate() fold keeps the generated stage small). The fold
+    * itself is `ArrayAggregate`, a `CodegenFallback` in Spark 4.1:
+    * whole-stage codegen calls into it, and it runs interpreted.
     */
-  private def bankLit(entries: Seq[(Int, Array[Double])]): Column =
+  private[graft] def bankLit(entries: Seq[(Int, Array[Double])]): Column =
     typedlit(entries.sortBy(_._1).map { case (i, c) => (i, c.toSeq) })
 
   /** argmin id over a literal (id, vector) bank by `dist` — what the
     * Lloyd/encode consumers used to compute as a broadcast cross join
     * + min(struct(dist, id)) hash re-aggregation + corpus self-join
-    * back on the row key, as ONE codegen'd fold per row. Identical
+    * back on the row key, as ONE aggregate() fold per row. The fold is
+    * interpreted (`ArrayAggregate` is a `CodegenFallback`): each row
+    * evaluates the lambda once per bank entry. Identical
     * output: the fold visits ids ascending and the strict < keeps the
     * earlier (smaller) id on exact ties — min(struct)'s (dist, id)
     * order — and the dist arithmetic each caller passes is the join
@@ -303,8 +307,13 @@ object Ann {
     * the bank-sized row fan, the re-aggregation exchange and the
     * corpus-sized assignment self-join are simply gone — assignment
     * is map-side work on the scan.
+    *
+    * A row with no finite distance to any entry (a NaN/Inf/null
+    * vector, or an empty bank) fails the query with "no finite
+    * distance": there is no nearest id to return, and a −1 sentinel
+    * would flow on as a bogus cluster id or a null residual.
     */
-  private def argminOver(bank: Column, dist: Column => Column): Column =
+  private[graft] def argminOver(bank: Column, dist: Column => Column): Column =
     aggregate(bank,
       struct(lit(Double.PositiveInfinity).as("d"), lit(-1).as("i")),
       (acc, e) => {
@@ -312,7 +321,9 @@ object Ann {
         when(d < acc.getField("d"),
           struct(d.as("d"), e.getField("_1").as("i"))).otherwise(acc)
       },
-      acc => acc.getField("i"))
+      acc => when(acc.getField("i") >= 0, acc.getField("i"))
+        .otherwise(raise_error(lit("argminOver: no finite distance to " +
+          "any bank entry (NaN/Inf/null vector or empty bank)"))))
 
   /** Row-local nearest-centroid cid for a (v, norm2) row: squared
     * L2 = |v|² − 2 v·c + |c|², ties to the smaller cid.

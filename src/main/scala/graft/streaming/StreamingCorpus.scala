@@ -118,9 +118,9 @@ object StreamingCorpus {
     * Plan shape: the frozen banks ([[graft.similarity.Ann
     * .ivfPqCodebooks]] — the exact 'km'/'pqr'-seeded chains s13
     * trains, parameter-sized) embed as LITERAL arrays, so the whole
-    * encode is row-local codegen'd expressions: cid = the argmin of
-    * norm2 − 2·v·c + |c|² over 16 literal centroids (least() over
-    * (dist, cid) structs — s13's tie-to-smaller-cid), residual by one
+    * encode is row-local expressions: cid = the argmin of
+    * norm2 − 2·v·c + |c|² over 16 literal centroids (Ann.argminOver's
+    * interpreted fold — s13's tie-to-smaller-cid), residual by one
     * zip_with against the cid-selected literal, each subspace's code
     * the same argmin over 16 literal codewords. ZERO state, zero
     * shuffle, no stream-static join — per-print cost is m·codes
@@ -156,25 +156,16 @@ object StreamingCorpus {
     val sub = 64 / m
     val (cents, cb) = graft.similarity.Ann.ivfPqCodebooks(s, dir, m = m)
     // Each bank is ONE typedlit array of (id, vector) structs and each
-    // argmin ONE aggregate() fold over it — an unrolled least() over
+    // argmin ONE aggregate() fold over it (Ann.argminOver, the batch
+    // index build's own fold) — an unrolled least() over
     // per-codeword (dist, id) structs inlined 16 literal vectors per
     // bank and pushed the stage past the 64 KB codegen method limit
     // (whole-stage codegen fell back to interpreted for the whole
     // plan). The fold keeps the earlier (smaller) id on ties —
     // exactly the batch min(struct(dist, id)) order — and the dist
     // chain inside the lambda is the bank-join chain verbatim.
-    def bankLit(entries: Seq[(Int, Array[Double])]): Column =
-      typedlit(entries.sortBy(_._1).map { case (i, c) => (i, c.toSeq) })
-    def argmin(bank: Column, dist: Column => Column): Column =
-      aggregate(bank,
-        struct(lit(Double.PositiveInfinity).as("d"), lit(-1).as("i")),
-        (acc, e) => {
-          val d = dist(e.getField("_2"))
-          when(d < acc.getField("d"),
-            struct(d.as("d"), e.getField("_1").as("i"))).otherwise(acc)
-        },
-        acc => acc.getField("i"))
-    val cidCol = argmin(bankLit(cents.toSeq),
+    import graft.similarity.Ann.{argminOver, bankLit}
+    val cidCol = argminOver(bankLit(cents.toSeq),
       c => col("norm2") - lit(2.0) * dot(col("v"), c) + dot(c, c))
     val centMap = typedlit(cents.map { case (cid, c) =>
       cid -> c.toSeq }.toMap)
@@ -182,7 +173,7 @@ object StreamingCorpus {
     def codeCol(mi: Int): Column = {
       val sv = slice(col("rv"), mi * sub + 1, sub)
       val sn2 = dot(sv, sv)
-      argmin(bankLit(cbByM(mi).toSeq.map { case (_, code, cw) =>
+      argminOver(bankLit(cbByM(mi).toSeq.map { case (_, code, cw) =>
         (code, cw) }),
         c => sn2 - lit(2.0) * dot(sv, c) + dot(c, c))
     }

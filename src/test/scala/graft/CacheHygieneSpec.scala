@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-14 verdict item 7: a tickerPairs-consuming action OUTSIDE

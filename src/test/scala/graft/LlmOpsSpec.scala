@@ -186,6 +186,31 @@ class LlmOpsSpec extends AnyFunSuite {
       .collect().map(_.toString).sameElements(again))
   }
 
+  test("centroid assignment fails loudly on a NaN embedding or an empty bank") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("nanemb").toString
+    val r = new scala.util.Random(7)
+    val rows = (0 until 40).map(i =>
+      (i.toLong, Array.fill(64)(r.nextGaussian().toFloat), s"l$i")) :+
+      ((40L, Array.fill(64)(Float.NaN), "l40"))
+    rows.toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+    def messages(t: Throwable): String = Iterator.iterate(t)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    Seq[(String, () => Any)](
+      "semDedup NaN" -> (() => Ann.semDedup(spark, tmp, nCentroids = 4).collect()),
+      "ivfTopK NaN" -> (() =>
+        Ann.ivfTopK(spark, tmp, nCentroids = 4, nProbe = 2).collect()),
+      "ivfPqTopK NaN" -> (() =>
+        Ann.ivfPqTopK(spark, tmp, nCentroids = 4, nProbe = 2).collect()),
+      "semDedup empty bank" -> (() =>
+        Ann.semDedup(spark, dir, nCentroids = 0).collect())
+    ).foreach { case (name, call) =>
+      val e = intercept[Exception](call())
+      assert(messages(e).contains("no finite distance"), s"$name: ${messages(e)}")
+    }
+  }
+
   test("s05 PQ ADC achieves recall against the exact L2 top-k") {
     import graft.dedup.Dedup.dot
     import org.apache.spark.sql.expressions.Window
@@ -696,7 +721,6 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("media decoders flag corrupt payloads instead of failing the job") {
     import graft.multimodal.{Audio, Multimodal, Video}
-    import spark.implicits._
     val garbage = lit("definitely not a media payload".getBytes("US-ASCII"))
     // tamper ONE row per table: replace its payload with garbage (and,
     // for the second victim, a TRUNCATED but well-prefixed payload)
@@ -950,7 +974,7 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("p07 release manifest composes d13 packing and t04 checksums") {
-    import graft.operators.{CorpusPipeline, Sampling}
+    import graft.operators.CorpusPipeline
     val man = CorpusPipeline.p07ReleaseManifest(spark, dir).collect()
       .map(r => r.getAs[Long]("shard") -> r).toMap
     val pack = graft.operators.Sampling.sequencePack(spark, dir).collect()
@@ -1619,5 +1643,24 @@ class LlmOpsSpec extends AnyFunSuite {
         labels(a) == lab && labels(b) == lab }
       assert(r.getAs[Long]("dup_pairs") == dp, r.toString)
     }
+  }
+
+  test("a warm corpus + report round compiles no generated classes") {
+    import graft.operators.{CorpusPipeline, TickerAnomaly}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // the round plans more distinct generated classes than Spark's
+    // default 100-entry cache holds: with it, every warm round
+    // recompiled 156 of them
+    def round(): Unit = {
+      CorpusPipeline.curate(spark, dir).collect()
+      MinHashLSH.nearDupPairs(spark, dir).collect()
+      Ann.semDedup(spark, dir).collect()
+      TickerAnomaly.report(spark, dir).collect()
+    }
+    round()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    round()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"the warm round compiled $compiled classes")
   }
 }

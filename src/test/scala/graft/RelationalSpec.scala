@@ -66,7 +66,6 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("q46 pivot cells sum to the order count") {
-    import org.apache.spark.sql.functions._
     val p = operators.Relational.pivotSegments(spark, dir)
     val cells = p.collect().map(r => (1 to 5).map(i => r.getLong(i)).sum).sum
     assert(cells == Tables.orders(spark, dir).count())
@@ -257,7 +256,6 @@ class RelationalSpec extends AnyFunSuite {
   test("q87 json extract: planted props parse exactly, malformed and " +
       "null rows counted but excluded from k stats") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val rows = Seq(
       (0L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1L, "a",
         1.0, """{"k": 5}"""),

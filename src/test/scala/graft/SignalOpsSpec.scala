@@ -1695,7 +1695,6 @@ class SignalOpsSpec extends AnyFunSuite {
     "burst pattern flags bursty") {
     import spark.implicits._
     def write(gapsSec: Seq[Long]): String = {
-      var t = 0L
       val rows = (0L +: gapsSec.scanLeft(0L)(_ + _).tail).zipWithIndex
         .map { case (sec, i) =>
           (1L, "bu", i.toLong,

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.{SignalOps, TickerAnomaly}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Batch-side skew proofs — §5 claims the AQE-partitioned batch

@@ -868,7 +868,6 @@ class StreamingSpec extends AnyFunSuite {
   test("st13 streaming drift: stable windows score exactly zero, a " +
       "level shift flags after the pivot") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val tmp = java.nio.file.Files.createTempDirectory("drift").toString
     def ts(d: Int, sec: Int) =
       java.sql.Timestamp.valueOf(f"2024-01-$d%02d 12:00:$sec%02d")
