@@ -20,6 +20,15 @@ import org.apache.spark.sql.SparkSession
   * call needs, and every call recompiles them. Every graft entry
   * point (`Verify`, `Bench`, the specs, the `perfbench` harness) builds
   * its session here, so the size set below is the one the JVM keeps.
+  *
+  * It also registers the streaming checkpoint file manager, for the
+  * same reason: a query's offset and commit logs and its state store
+  * read `spark.sql.streaming.checkpointFileManagerClass` from the
+  * session that runs it, so only the builder reaches every entry
+  * point. [[graft.streaming.GraftCheckpointFileManager]] writes `file:`
+  * checkpoints without Hadoop's `readlink` process per rename (most of
+  * a `ticker_stream` micro-batch on a JVM without `libhadoop`) and
+  * leaves every other scheme to Spark's own choice.
   */
 object GraftSession {
   def builder(master: String = "local[32]"): SparkSession.Builder =
@@ -39,6 +48,9 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // a name, not classOf: batch-only sessions load no streaming class
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "graft.streaming.GraftCheckpointFileManager")
 
   def get(master: String = "local[32]"): SparkSession = {
     val s = builder(master).getOrCreate()

@@ -339,6 +339,17 @@ object Sampling {
     */
   private val LocalSelectMaxRows = 1L << 20
 
+  /** The local tier's selection boundary: the k-th of the
+    * `(w_e9, doc_id)` rows under the published rank rule (w_e9 desc,
+    * doc_id asc). doc_id is unique, so the boundary pair decides ties
+    * exactly like the radix tier's doc_id cut. The descending order is
+    * a reversed comparator, not a negated key: `-Long.MinValue` wraps
+    * to itself and would rank the lowest weight first.
+    */
+  private[graft] def localBoundary(rows: Array[(Long, Long)],
+      k: Int): (Long, Long) =
+    rows.sorted(Ordering.Tuple2(Ordering.Long.reverse, Ordering.Long))(k - 1)
+
   private def kthSmallestLong(df: DataFrame, c: String, k: Long): Long = {
     require(k >= 1, s"k must be >= 1, got $k")
     val ub = col(c).bitwiseXOR(lit(Long.MinValue))
@@ -458,16 +469,12 @@ object Sampling {
       if (k <= 0) lit(false)
       else if (k >= n) lit(true)
       else if (n <= LocalSelectMaxRows) {
-        // local tier: the k-th row under the published rank rule
-        // (w_e9 desc, doc_id asc) IS the selection boundary — one
-        // collect replaces the 3-6 histogram/count jobs below, same
-        // rows selected (doc_id is unique, so the boundary pair
-        // decides ties exactly like the radix doc_id cut)
+        // local tier: one collect replaces the 3-6 histogram/count
+        // jobs below, same rows selected
         import raw.sparkSession.implicits._
-        val sorted = all.select(col("w_e9"), col("doc_id"))
-          .as[(Long, Long)].collect()
-          .sortBy { case (w, d) => (-w, d) }
-        val (wk, dk) = sorted(k.toInt - 1)
+        val (wk, dk) = localBoundary(
+          all.select(col("w_e9"), col("doc_id")).as[(Long, Long)].collect(),
+          k.toInt)
         col("w_e9") > wk || (col("w_e9") === wk && col("doc_id") <= dk)
       } else {
         // k-th LARGEST weight = (n-k+1)-th smallest; rows strictly

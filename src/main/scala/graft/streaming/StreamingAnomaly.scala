@@ -295,12 +295,21 @@ object StreamingAnomaly extends Serializable {
     *
     * Cost profile (sf0.1, local[32], warm session): st02 runs within
     * ~0.3 s of st08 — whose state is O(1) per key — so the time is the
-    * streaming harness floor (query start/stop, per-batch group sort,
-    * state commit), not the 28-period frame or the timeout
-    * registration; the 4 s "intrinsic" reading in round 5 was cold-JVM
-    * streaming JIT that the bench session hygiene now absorbs in
-    * warm-up. The staleness semantics themselves add only the extra
-    * emitted rows.
+    * streaming harness floor, not the 28-period frame or the timeout
+    * registration. Most of that floor was checkpoint-file I/O: with
+    * Spark's default `FileContext` manager, Hadoop's local file system
+    * (no `libhadoop`) started a `readlink` process for each side of
+    * every checkpoint rename, state delta files and the offset and
+    * commit logs alike, and state commit took 0.7–0.8 s summed over
+    * the partitions of a `ticker_stream` batch (under 0.06 s now).
+    * [[GraftCheckpointFileManager]] renames local files without those
+    * processes. What is left is query start/stop, the per-batch group
+    * sort, a `chmod` process per created checkpoint file (Hadoop's
+    * `setPermission`, now the largest wait of a batch) and the state
+    * encoder's per-batch `SafeProjection` recompiles; the 4 s
+    * "intrinsic" reading in round 5 was cold-JVM streaming JIT that the
+    * bench session hygiene now absorbs in warm-up. The staleness
+    * semantics themselves add only the extra emitted rows.
     */
   def st02StatefulFlags(s: SparkSession, dir: String,
       cfg: AnomalyConfig = AnomalyConfig(),

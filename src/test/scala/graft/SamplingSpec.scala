@@ -73,6 +73,17 @@ class SamplingSpec extends AnyFunSuite {
     assert((4L to 10L).forall(out(_) == 0), out.toString)
   }
 
+  test("d09 local-tier boundary ranks extreme weights like the radix " +
+      "tier (w_e9 desc, doc_id asc)") {
+    val rows = Array((Long.MinValue, 1L), (0L, 2L), (Long.MaxValue, 3L),
+      (0L, 4L), (Long.MinValue + 1, 5L))
+    val expected = Seq((Long.MaxValue, 3L), (0L, 2L), (0L, 4L),
+      (Long.MinValue + 1, 5L), (Long.MinValue, 1L))
+    expected.zipWithIndex.foreach { case (want, i) =>
+      assert(Sampling.localBoundary(rows, i + 1) == want, s"k=${i + 1}")
+    }
+  }
+
   test("d09 external-target overload scores against a disjoint corpus") {
     import spark.implicits._
     // target corpus is a SEPARATE table (overlapping ids with raw —

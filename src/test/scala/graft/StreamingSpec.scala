@@ -202,6 +202,119 @@ class StreamingSpec extends AnyFunSuite {
     assert(resumed.sameElements(single))
   }
 
+  private val FileContextManager = "org.apache.spark.sql.execution." +
+    "streaming.checkpointing.FileContextBasedCheckpointFileManager"
+
+  test("checkpoint files on file: paths go through Spark's FileSystem " +
+      "manager") {
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    val root = java.nio.file.Files.createTempDirectory("graft_cfm_class")
+    // with and without the `file:` scheme (checkpoint options are
+    // usually bare paths)
+    for (p <- Seq(root.toUri.toString, root.toString)) {
+      CheckpointFileManager.create(new org.apache.hadoop.fs.Path(p),
+          spark.sessionState.newHadoopConf()) match {
+        case g: graft.streaming.GraftCheckpointFileManager =>
+          assert(g.underlying.isInstanceOf[FileSystemBasedCheckpointFileManager],
+            s"$p: ${g.underlying.getClass.getName}")
+          assert(g.isLocal && g.exists(new org.apache.hadoop.fs.Path(p)), p)
+        case other => fail(s"$p: session picked ${other.getClass.getName}")
+      }
+    }
+  }
+
+  test("the graft checkpoint manager keeps the FileContext manager's " +
+      "atomic-write behaviour on a local dir") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+    import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    for (cls <- Seq(None, Some(FileContextManager))) {
+      val root = new Path(
+        java.nio.file.Files.createTempDirectory("graft_cfm").toUri)
+      val hc = spark.sessionState.newHadoopConf()
+      cls.foreach(hc.set(graft.streaming.GraftCheckpointFileManager.ConfKey, _))
+      val fm = CheckpointFileManager.create(root, hc)
+      val p = new Path(root, "0")
+      def write(v: String, overwrite: Boolean): Unit = {
+        val out = fm.createAtomic(p, overwrite)
+        out.write(v.getBytes(UTF_8))
+        out.close()
+      }
+      def read(): String = {
+        val in = fm.open(p)
+        try new String(in.readAllBytes(), UTF_8) finally in.close()
+      }
+      write("a", overwrite = false)
+      intercept[FileAlreadyExistsException](write("b", overwrite = false))
+      assert(read() == "a", s"$cls: a refused write changed the file")
+      // the state store overwrites its delta files; the JVM's cached
+      // `file:` FileSystem (Hive's ProxyLocalFileSystem) would keep "a"
+      write("c", overwrite = true)
+      assert(read() == "c", s"$cls: an overwriting write kept the old file")
+      // a cancelled write leaves neither the file nor its temp file
+      val cancelDir = new Path(root, "cancelled")
+      fm.mkdirs(cancelDir)
+      val out = fm.createAtomic(new Path(cancelDir, "1"),
+        overwriteIfPossible = false)
+      out.write(1)
+      out.cancel()
+      val left = new java.io.File(cancelDir.toUri).list().toSeq
+      assert(left.isEmpty, s"$cls: a cancelled write left $left")
+    }
+  }
+
+  test("st02 resumes exactly once across a switch of checkpoint manager " +
+      "and keeps Spark's state checksum files") {
+    import java.nio.file.{Files, StandardCopyOption}
+    import java.nio.file.attribute.FileTime
+    val key = graft.streaming.GraftCheckpointFileManager.ConfKey
+    val graftManager = spark.conf.get(key)
+    val single = StreamingAnomaly.st02StatefulFlags(spark, dir)
+      .collect().map(_.toString).sorted
+    val slices = stageSlices().listFiles()
+      .filter(_.getName.startsWith("slice_")).sortBy(_.getName)
+    // the checkpoint written before the switch is the FileContext
+    // manager's (Spark's default, and every graft checkpoint of older
+    // builds), then the reverse
+    for ((first, second) <- Seq(FileContextManager -> graftManager,
+        graftManager -> FileContextManager)) {
+      val inDir = Files.createTempDirectory("st02_switch_in").toFile
+      val cp = Files.createTempDirectory("st02_switch_cp").toString
+      val outPath = Files.createTempDirectory("st02_switch_out").toString
+      def addSlice(i: Int): Unit = {
+        val dst = new java.io.File(inDir, slices(i).getName)
+        Files.copy(slices(i).toPath, dst.toPath,
+          StandardCopyOption.REPLACE_EXISTING)
+        Files.setLastModifiedTime(dst.toPath,
+          FileTime.fromMillis(1700000000000L + i * 60000L))
+      }
+      def run(manager: String): String = {
+        spark.conf.set(key, manager)
+        try fileSink(StreamingAnomaly.st02Transform(spark,
+            spark.readStream.schema(StreamingAnomaly.eventSchema)
+              .option("maxFilesPerTrigger", "1")
+              .parquet(inDir.getAbsolutePath)), outPath, cp)
+        finally spark.conf.set(key, graftManager)
+      }
+      addSlice(0); addSlice(1)
+      val written = run(first)
+      val out1 = spark.read.parquet(written).count()
+      addSlice(2); addSlice(3)
+      run(second)
+      val resumed = spark.read.parquet(written).collect().map(_.toString).sorted
+      assert(resumed.length > out1, s"$first → $second: no new rows")
+      assert(resumed.length == single.length && resumed.sameElements(single),
+        s"$first → $second: resumed ${resumed.length} vs single ${single.length}")
+      // Spark's own checksums (N.delta.crc), not Hadoop's hidden
+      // .N.delta.crc sidecars
+      val stateDir = new java.io.File(
+        StreamingAnomaly.versionedCheckpoint(cp), "state")
+      val crcs = Files.walk(stateDir.toPath).toArray
+        .map(_.toString.split('/').last).filter(_.matches("\\d+\\.delta\\.crc"))
+      assert(crcs.nonEmpty, s"$first → $second: no state checksum files")
+    }
+  }
+
   test("st09 kill-and-restart restores the custom two-limb Holt state " +
       "(HDFS and RocksDB providers)") {
     import java.nio.file.{Files, StandardCopyOption}
