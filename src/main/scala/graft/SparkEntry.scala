@@ -1256,7 +1256,7 @@ object SparkEntry {
                (PARTITION BY user_id, event_type, seg_id ORDER BY ts, event_id
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp,
              CAST(SUM(dl) OVER f AS DOUBLE) AS sumd,
-             CAST(SUM(dl * dl) OVER f AS DOUBLE) AS sumsq,
+             CAST(SUM(CAST(dl AS HUGEINT) * dl) OVER f AS DOUBLE) AS sumsq,
              COUNT(dl) OVER f AS n
            FROM d
            WINDOW f AS (PARTITION BY user_id, event_type, seg_id

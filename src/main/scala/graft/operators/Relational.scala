@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.FixedPoint.usOf
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -447,8 +448,6 @@ object Relational {
       .orderBy(col("event_type")).limit(3).as[String].collect()
     require(stages.length == 3, s"funnel needs 3 event types, got ${stages.length}")
     val (s1, s2, s3) = (stages(0), stages(1), stages(2))
-    def usOf(t: java.sql.Timestamp): Long =
-      t.getTime / 1000 * 1000000L + t.getNanos / 1000
     ev.select(col("user_id"), col("event_type"), col("ts"))
       .as[(Long, String, java.sql.Timestamp)]
       .groupByKey(_._1)

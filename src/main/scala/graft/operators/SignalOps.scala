@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.FixedPoint.usOf
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -33,13 +34,6 @@ object SignalOps {
     Window.partitionBy(keyCols: _*).orderBy(col("ts"), col("event_id"))
   private def wRun = wAsc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
   private def wKey = Window.partitionBy(keyCols: _*)
-
-  /** Event-time in µs (ms-floor + ns remainder) — the load-bearing
-    * sort key the per-key recursions (q14/q54/q62/q63/q64) and the
-    * oracles' (ts, event_id) ORDER BY share; keep the ONE definition.
-    */
-  private def usOf(t: java.sql.Timestamp): Long =
-    t.getTime / 1000 * 1000000L + t.getNanos / 1000
 
   /** q19: CUSUM change-point detection (Page 1954). The textbook
     * recursion S+_t = max(0, S+_{t-1} + z_t - k) cannot be windowed
@@ -7258,7 +7252,7 @@ object SignalOracle {
       |      (PARTITION BY user_id, event_type, seg_id ORDER BY ts, event_id
       |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp,
       |    CAST(SUM(dl) OVER f AS DOUBLE) AS sumd,
-      |    CAST(SUM(dl * dl) OVER f AS DOUBLE) AS sumsq,
+      |    CAST(SUM(CAST(dl AS HUGEINT) * dl) OVER f AS DOUBLE) AS sumsq,
       |    COUNT(dl) OVER f AS n
       |  FROM d
       |  WINDOW f AS (PARTITION BY user_id, event_type, seg_id
@@ -7415,7 +7409,7 @@ object SignalOracle {
       |      (PARTITION BY user_id, event_type, seg_id ORDER BY ts, event_id
       |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp,
       |    CAST(SUM(dl) OVER f AS DOUBLE) AS sumd,
-      |    CAST(SUM(dl * dl) OVER f AS DOUBLE) AS sumsq,
+      |    CAST(SUM(CAST(dl AS HUGEINT) * dl) OVER f AS DOUBLE) AS sumsq,
       |    COUNT(dl) OVER f AS n
       |  FROM d
       |  WINDOW f AS (PARTITION BY user_id, event_type, seg_id

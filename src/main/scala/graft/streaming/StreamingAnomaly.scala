@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.FixedPoint.{fromLimbs, scale4, toLimbs, usOf}
 import graft.operators.AnomalyConfig
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,11 +15,12 @@ import StreamRunner.{collect, pinStatePartitions, stagedStream}
   * Every entry runs the events parquet through a real `readStream` →
   * `writeStream` graph driven by [[StreamRunner]], which owns the state
   * sizing and both sinks; the stateful detectors share one keyed-state
-  * prelude ([[keyed]]), so an entry here is its transform plus its
-  * output projection.
+  * prelude ([[keyed]]), and the per-key staleness-segment detectors
+  * one fold ([[segments]]), so such an entry is its per-event step
+  * plus its output projection ([[eventRows]]).
   */
-// Serializable: closures over this module's local defs (e.g. the
-// st30 update eta-expansion) capture MODULE$ as the lambda receiver;
+// Serializable: closures over this module's defs (e.g. the segment
+// fold's call to inOrder) capture MODULE$ as the lambda receiver;
 // the module carries no meaningful state, so serializing it is free
 object StreamingAnomaly extends Serializable {
 
@@ -245,6 +247,89 @@ object StreamingAnomaly extends Serializable {
     keyed(stream, timeout)(e => (e.user_id, e.event_type))(update)
   }
 
+  private[streaming] type Ticker = (Long, String)
+
+  /** The rows a keyed fold emits for one key in one call. */
+  private[streaming] type Out[U] =
+    scala.collection.mutable.Builder[U, Vector[U]]
+
+  /** One key's events of a micro-batch in (event-time µs, event_id)
+    * order: the in-order contract every per-key fold relies on.
+    */
+  private def inOrder(events: Iterator[TickEvent]): Seq[TickEvent] =
+    events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
+
+  /** One event of a [[segments]] fold: `v4` is the event's value on
+    * the 1e-4 grid, `prev` the open segment's state (None when `e`
+    * starts a segment). Appends the event's rows to `out` and returns
+    * the segment's next state. A trait rather than a function type so
+    * `v4` stays an unboxed long.
+    */
+  private[streaming] trait Step[K, S, U] extends Serializable {
+    def apply(key: K, e: TickEvent, v4: Long, prev: Option[S],
+        out: Out[U]): S
+  }
+
+  /** The staleness-segment fold of the per-key detectors: each key's
+    * events form segments, and a segment ends when the key is quiet
+    * longer than `staleDays` of event time. Both ways of seeing that
+    * quiet period run the same `close(key, state, out)`:
+    *  - the watermark passes the segment's last event + `staleDays`
+    *    (EventTimeTimeout): close, then remove the key's state, so key
+    *    churn on an unbounded feed cannot grow the state store;
+    *  - an arriving event lies more than `staleDays` after the last
+    *    one: close, then `step` starts a fresh segment at that event.
+    * So a timeout and an in-data gap emit identical rows. Per batch the
+    * fold sorts the key's events into (µs, event_id) order, scales each
+    * value to the 1e-4 grid (failing the query on a value with no grid
+    * point, see [[FixedPoint.scale4]]), and stores the state and its
+    * timeout once. Timeout arithmetic is ms-floor, as Spark's watermark
+    * is (ms-floor(max event ts) − delay, firing on strict <).
+    * `lastUs` reads a stored state's last event µs.
+    */
+  private[streaming] def segments[K, S, U](staleDays: Double,
+      lastUs: S => Long,
+      close: (K, S, Out[U]) => Unit = (_: K, _: S, _: Out[U]) => ())(
+      step: Step[K, S, U]): (K, Iterator[TickEvent], GroupState[S])
+        => Iterator[U] = {
+    val staleUs = (staleDays * 86400e6).toLong
+    val staleMs = (staleDays * 86400e3).toLong
+    (key, events, state) => {
+      val out = Vector.newBuilder[U]
+      if (state.hasTimedOut) {
+        close(key, state.get, out)
+        state.remove()
+      } else {
+        var cur = state.getOption
+        var last = cur.fold(0L)(lastUs)
+        inOrder(events).foreach { e =>
+          val us = usOf(e.ts)
+          if (cur.isDefined && us - last > staleUs) {
+            close(key, cur.get, out)
+            cur = None
+          }
+          cur = Some(step(key, e, scale4(e.value, key, e.event_id), cur, out))
+          last = us
+        }
+        state.update(cur.get)
+        state.setTimeoutTimestamp(Math.floorDiv(last, 1000L) + staleMs)
+      }
+      out.result().iterator
+    }
+  }
+
+  /** A per-event detector's output: the key columns, `event_id`, `ts`
+    * as `date_recorded`, then `cols`, ordered by key, time and
+    * event_id.
+    */
+  private def eventRows(s: SparkSession, entry: String, ds: Dataset[_],
+      key: Seq[String] = Seq("user_id", "event_type"))(
+      cols: String*): DataFrame =
+    collect(s, entry, ds)
+      .select(((key :+ "event_id").map(col) ++
+        (col("ts").as("date_recorded") +: cols.map(col))): _*)
+      .orderBy((key ++ Seq("date_recorded", "event_id")).map(col): _*)
+
   /** diffs is Array[Long], not List: the state encoder's primitive
     * fast path (UnsafeArrayData.fromPrimitiveArray) serializes it as
     * one memcpy per key per batch, where a List walks 28 boxed cons
@@ -259,32 +344,89 @@ object StreamingAnomaly extends Serializable {
       stddev_flag: Int, repetition_flag: Int, staleness_flag: Int,
       anomaly: Int)
 
-  /** Epoch µs of a µs-precision Timestamp (getTime is ms-floor). */
-  private def usOf(t: java.sql.Timestamp): Long =
-    t.getTime / 1000 * 1000000L + t.getNanos / 1000
+  /** st02's baseline at a segment's first print. */
+  private def seedBase(e: TickEvent, v4: Long): TickerState =
+    TickerState(e.ts, e.value, v4, 1, Array.empty[Long])
+
+  /** st02's baseline after one more print: its |diff| to the last
+    * print joins the front of the `periods`-deep diff window, and a
+    * zero diff extends the repetition run. Shared by st02, st30 and
+    * st35, with [[zscore]].
+    */
+  private def advance(st: TickerState, e: TickEvent, v4: Long,
+      periods: Int): TickerState = {
+    val dl = math.abs(v4 - st.lastScaled)
+    val n = math.min(st.diffs.length + 1, periods)
+    val ds = new Array[Long](n)
+    ds(0) = dl
+    System.arraycopy(st.diffs, 0, ds, 1, n - 1)
+    TickerState(e.ts, e.value, v4, if (dl == 0L) st.runLength + 1 else 1,
+      ds)
+  }
+
+  /** The z-score of the newest diff, `diffs(0)`, against the window.
+    * Σd and Σd² are exact integers converted to double ONCE each (the
+    * §8 fixed-point discipline the oracle mirrors): Σd in a long, Σd²
+    * as an unsigned 128-bit (hi, lo) pair, because one ×10 decimal-
+    * point error at an index near 35,000 already squares past
+    * Long.MaxValue. A sum that fits a long converts exactly as
+    * `Long.toDouble`; a wider one through BigInteger, also correctly
+    * rounded.
+    */
+  private def zscore(diffs: Array[Long]): Double = {
+    val n = diffs.length
+    var sumdL = 0L
+    var hi = 0L
+    var lo = 0L
+    var j = 0
+    while (j < n) {
+      // d >= 0, so the signed high word of d·d is the unsigned one
+      val d = diffs(j)
+      sumdL = Math.addExact(sumdL, d)
+      val lo2 = lo + d * d
+      hi += Math.multiplyHigh(d, d) +
+        (if (java.lang.Long.compareUnsigned(lo2, lo) < 0) 1L else 0L)
+      lo = lo2
+      j += 1
+    }
+    val sumd = sumdL.toDouble
+    val sumsq =
+      if (hi == 0L && lo >= 0L) lo.toDouble
+      else ((BigInt(hi) << 64) +
+        BigInt(java.lang.Long.toUnsignedString(lo))).toDouble
+    val num = sumsq - sumd * sumd / n
+    if (n >= 2 && num > 0)
+      math.abs(diffs(0).toDouble - sumd / n) / math.sqrt(num / (n - 1))
+    else 0.0
+  }
 
   /** st02: the q09 flag semantics as continuously-updating state —
     * per-ticker rolling window of one-period diffs, z-score and
     * repetition-run flags per arriving event. State is O(dataPeriods)
-    * per key AND BOUNDED IN KEY COUNT: a ticker quiet longer than
-    * `staleDays` (event time) is declared stale via `EventTimeTimeout`
-    * — one staleness-flag row is emitted (q09's third flag, rendered in
-    * event time) and the key's state is REMOVED, so key churn on an
-    * unbounded feed cannot leak the state store. A ticker that resumes
-    * after staleness starts a fresh baseline (segment semantics): the
-    * same gap rule is applied inline when the quiet period is observed
-    * within arriving data, so timeout-eviction and in-data gaps produce
-    * identical output — exactly one staleness row per closed segment,
-    * plus one for final segments the watermark outlives.
+    * per key AND BOUNDED IN KEY COUNT: it runs on the [[segments]]
+    * fold, so a ticker quiet longer than `staleDays` (event time) is
+    * declared stale via `EventTimeTimeout` — one staleness-flag row is
+    * emitted (q09's third flag, rendered in event time) and the key's
+    * state is REMOVED, so key churn on an unbounded feed cannot leak
+    * the state store. A ticker that resumes after staleness starts a
+    * fresh baseline (segment semantics). The stale row is st02's
+    * `close`, which the fold runs both on the timeout and on a quiet
+    * period observed within arriving data, so timeout-eviction and
+    * in-data gaps produce identical output — exactly one staleness row
+    * per closed segment, plus one for final segments the watermark
+    * outlives.
     *
     * Values are rounded to 4 decimals and held as scaled longs; the
     * rolling mean/variance come from EXACT integer sums converted to
-    * double once, so the z-score is bit-identical to the windowed SQL
-    * a DuckDB oracle computes (§8 fixed-point discipline — the scale
-    * factor cancels in the z ratio, so no 1e-4 division ever happens).
-    * Timeout arithmetic is ms-floor on both sides (Timestamp.getTime ↔
-    * DuckDB epoch_ms; Spark watermark = ms-floor(max event ts) − delay,
-    * timeout fires on strict <) so the staleness row set is exact too.
+    * double once (Σd² in 128 bits, see [[zscore]]), so the z-score is
+    * bit-identical to the windowed SQL a DuckDB oracle computes (§8
+    * fixed-point discipline — the scale factor cancels in the z ratio,
+    * so no 1e-4 division ever happens). A NaN or infinite value fails
+    * the query, naming the ticker and event_id, instead of entering
+    * the baseline as 0.0 or Long.MaxValue. Timeout arithmetic is
+    * ms-floor on both sides (Timestamp.getTime ↔ DuckDB epoch_ms; Spark
+    * watermark = ms-floor(max event ts) − delay, timeout fires on
+    * strict <) so the staleness row set is exact too.
     *
     * In-order contract: within a micro-batch events sort by event time;
     * ACROSS batches the source must deliver each key's events
@@ -325,76 +467,27 @@ object StreamingAnomaly extends Serializable {
       cfg: AnomalyConfig = AnomalyConfig(),
       staleDays: Double = 8.0): org.apache.spark.sql.Dataset[Flagged] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-
-    def staleRow(key: (Long, String), st: TickerState): Flagged =
-      Flagged(key._1, key._2, -1L, st.lastTs, st.lastValue, 0.0, 0, 0, 1, 1)
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[TickerState]): Iterator[Flagged] = {
-      if (state.hasTimedOut) {
-        // watermark passed lastTs + staleDays with no new data: flag the
-        // ticker stale and EVICT — the state store stays bounded by the
-        // number of live tickers, not every ticker ever seen
-        val row = staleRow(key, state.get)
-        state.remove()
-        Iterator.single(row)
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[Flagged]
-        var stOpt = state.getOption
-        sorted.foreach { e =>
-          // the same staleness rule, observed inside arriving data: a
-          // gap > staleDays closes the old segment (same row the timeout
-          // path would have emitted) and restarts the baseline
-          stOpt.filter(st => usOf(e.ts) - usOf(st.lastTs) > staleUs)
-            .foreach { st => out += staleRow(key, st); stOpt = None }
-          // batch q09 rounds each value to 4 decimals before differencing
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          stOpt match {
-            case None =>
-              stOpt = Some(TickerState(e.ts, e.value, vl, 1,
-                Array.empty[Long]))
-              out += Flagged(key._1, key._2, e.event_id, e.ts, e.value,
-                0.0, 0, 0, 0, 0)
-            case Some(st) =>
-              val dl = math.abs(vl - st.lastScaled)
-              val newRun = if (dl == 0L) st.runLength + 1 else 1
-              val n = math.min(st.diffs.length + 1, cfg.dataPeriods)
-              val ds = new Array[Long](n)
-              ds(0) = dl
-              System.arraycopy(st.diffs, 0, ds, 1, n - 1)
-              // exact long sums, ONE double conversion each (the §8
-              // fixed-point discipline the oracle mirrors)
-              var sumdL = 0L
-              var sumsqL = 0L
-              var j = 0
-              while (j < n) {
-                val d = ds(j); sumdL += d; sumsqL += d * d; j += 1
-              }
-              val sumd = sumdL.toDouble
-              val sumsq = sumsqL.toDouble
-              val num = sumsq - sumd * sumd / n
-              val z =
-                if (n >= 2 && num > 0)
-                  math.abs(dl.toDouble - sumd / n) / math.sqrt(num / (n - 1))
-                else 0.0
-              stOpt = Some(TickerState(e.ts, e.value, vl, newRun, ds))
-              val sdFlag = if (z >= cfg.stddevLim) 1 else 0
-              val repFlag = if (newRun >= cfg.repLim) 1 else 0
-              out += Flagged(key._1, key._2, e.event_id, e.ts, e.value, z,
-                sdFlag, repFlag, 0, if (sdFlag == 1 || repFlag == 1) 1 else 0)
-          }
-        }
-        val st = stOpt.get
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastTs.getTime + staleMs)
-        out.result().iterator
+    // a closed segment (timeout or in-data gap) flags the ticker stale
+    def staleRow(key: Ticker, st: TickerState, out: Out[Flagged]): Unit =
+      out += Flagged(key._1, key._2, -1L, st.lastTs, st.lastValue, 0.0, 0, 0,
+        1, 1)
+    perTicker(stream)(segments[Ticker, TickerState, Flagged](staleDays,
+        st => usOf(st.lastTs), staleRow) { (key, e, v4, prev, out) =>
+      prev match {
+        case None =>
+          out += Flagged(key._1, key._2, e.event_id, e.ts, e.value, 0.0, 0,
+            0, 0, 0)
+          seedBase(e, v4)
+        case Some(st) =>
+          val next = advance(st, e, v4, cfg.dataPeriods)
+          val z = zscore(next.diffs)
+          val sdFlag = if (z >= cfg.stddevLim) 1 else 0
+          val repFlag = if (next.runLength >= cfg.repLim) 1 else 0
+          out += Flagged(key._1, key._2, e.event_id, e.ts, e.value, z,
+            sdFlag, repFlag, 0, if (sdFlag == 1 || repFlag == 1) 1 else 0)
+          next
       }
-    }
-
-    perTicker(stream)(update)
+    })
   }
 
   /** Core of st02 over any streaming events frame (spec entry point for
@@ -501,73 +594,44 @@ object StreamingAnomaly extends Serializable {
   def st09Transform(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): org.apache.spark.sql.Dataset[HoltOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-    val limb = BigInt(1000000000000000000L) // 1e18
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[HoltState]): Iterator[HoltOut] = {
-      if (state.hasTimedOut) {
-        state.remove() // quiet ticker: baseline gone, key evicted
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[HoltOut]
-        var stOpt = state.getOption
-        sorted.foreach { e =>
-          // in-data staleness gap: restart the segment baseline
-          stOpt = stOpt.filter(st => usOf(e.ts) - st.lastUs <= staleUs)
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          stOpt match {
-            case None =>
-              stOpt = Some(HoltState(usOf(e.ts), vl, 0L, 0L, 0L, 0L, 0L))
-              out += HoltOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
-                None, None, None, 0)
-            case Some(st) =>
-              val pred = st.l + st.b
-              val err = vl - pred
-              val n = st.n + 1
-              val s1 = st.s1 + err
-              val s2 = BigInt(st.s2Hi) * limb + st.s2Lo +
-                BigInt(err) * BigInt(err)
-              val c = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
-              val z6 =
-                if (n > 1 && c > 0) {
-                  // BigInt like c (q54's exact-moment discipline):
-                  // Long would wrap where the BIGINT oracle raises
-                  val a = (BigInt(n) * BigInt(err) - BigInt(s1)).toDouble
-                  math.floor(a / math.sqrt(c.toDouble * n / (n - 1)) *
-                    1000000.0 + 0.5).toLong
-                } else 0L
-              // q54's dyadic fixed-point recursion, bit-for-bit
-              val l2 = math.floor((vl + st.l + st.b) / 2.0).toLong
-              val b2 = math.floor((l2 - st.l + 3.0 * st.b) / 4.0).toLong
-              stOpt = Some(HoltState(usOf(e.ts), l2, b2, n, s1,
-                (s2 / limb).toLong, (s2 % limb).toLong))
-              out += HoltOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
-                Some(pred / 10000.0), Some(err / 10000.0),
-                Some(z6 / 1000000.0),
-                if (math.abs(z6) >= 3000000L) 1 else 0)
-          }
-        }
-        val st = stOpt.get
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
+    perTicker(stream)(segments[Ticker, HoltState, HoltOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      prev match {
+        case None =>
+          out += HoltOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
+            None, None, None, 0)
+          HoltState(usOf(e.ts), vl, 0L, 0L, 0L, 0L, 0L)
+        case Some(st) =>
+          val pred = st.l + st.b
+          val err = vl - pred
+          val n = st.n + 1
+          val s1 = st.s1 + err
+          val s2 = fromLimbs(st.s2Hi, st.s2Lo) + BigInt(err) * BigInt(err)
+          val c = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
+          val z6 =
+            if (n > 1 && c > 0) {
+              // BigInt like c (q54's exact-moment discipline):
+              // Long would wrap where the BIGINT oracle raises
+              val a = (BigInt(n) * BigInt(err) - BigInt(s1)).toDouble
+              math.floor(a / math.sqrt(c.toDouble * n / (n - 1)) *
+                1000000.0 + 0.5).toLong
+            } else 0L
+          // q54's dyadic fixed-point recursion, bit-for-bit
+          val l2 = math.floor((vl + st.l + st.b) / 2.0).toLong
+          val b2 = math.floor((l2 - st.l + 3.0 * st.b) / 4.0).toLong
+          out += HoltOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
+            Some(pred / 10000.0), Some(err / 10000.0), Some(z6 / 1000000.0),
+            if (math.abs(z6) >= 3000000L) 1 else 0)
+          val (s2Hi, s2Lo) = toLimbs(s2)
+          HoltState(usOf(e.ts), l2, b2, n, s1, s2Hi, s2Lo)
       }
-    }
-
-    perTicker(stream)(update)
+    })
   }
 
   def st09FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st09", st09Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("forecast"),
-        col("resid"), col("holt_z6"), col("holt_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st09", st09Transform(s, stream, staleDays))("value",
+      "forecast", "resid", "holt_z6", "holt_flag")
 
   /** st14 per-ticker streaming Kalman state: O(1) per key and the
     * SMALLEST in the stateful family — just the level and its
@@ -599,53 +663,32 @@ object StreamingAnomaly extends Serializable {
   def st14Transform(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): org.apache.spark.sql.Dataset[KalmanOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
     val Qc = 10000000L
     val Rc = 100000000L
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[KalmanState]): Iterator[KalmanOut] = {
-      if (state.hasTimedOut) {
-        state.remove() // quiet ticker: prior gone, key evicted
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[KalmanOut]
-        var stOpt = state.getOption
-        sorted.foreach { e =>
-          // in-data staleness gap: restart the diffuse prior
-          stOpt = stOpt.filter(st => usOf(e.ts) - st.lastUs <= staleUs)
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          stOpt match {
-            case None =>
-              stOpt = Some(KalmanState(usOf(e.ts), vl, Rc))
-              out += KalmanOut(key._1, key._2, e.event_id, e.ts,
-                vl / 10000.0, vl / 10000.0, None, None, None, 0)
-            case Some(st) =>
-              // q62's integer-gain recursion, bit-for-bit
-              val pp = st.p + Qc
-              val err = vl - st.l
-              val k6 = math.floor(pp * 1000000.0 / (pp + Rc)).toLong
-              val l2 = st.l + math.floor(k6 * err / 1000000.0).toLong
-              val p2 = math.floor((1000000L - k6) * pp / 1000000.0).toLong
-              val z6 = math.floor(err / math.sqrt((pp + Rc).toDouble) *
-                1000000.0 + 0.5).toLong
-              stOpt = Some(KalmanState(usOf(e.ts), l2, p2))
-              out += KalmanOut(key._1, key._2, e.event_id, e.ts,
-                vl / 10000.0, l2 / 10000.0, Some(k6 / 1000000.0),
-                Some(err / 10000.0), Some(z6 / 1000000.0),
-                if (math.abs(z6) >= 3000000L) 1 else 0)
-          }
-        }
-        val st = stOpt.get
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
+    // a new segment restarts the diffuse prior
+    perTicker(stream)(segments[Ticker, KalmanState, KalmanOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      prev match {
+        case None =>
+          out += KalmanOut(key._1, key._2, e.event_id, e.ts,
+            vl / 10000.0, vl / 10000.0, None, None, None, 0)
+          KalmanState(usOf(e.ts), vl, Rc)
+        case Some(st) =>
+          // q62's integer-gain recursion, bit-for-bit
+          val pp = st.p + Qc
+          val err = vl - st.l
+          val k6 = math.floor(pp * 1000000.0 / (pp + Rc)).toLong
+          val l2 = st.l + math.floor(k6 * err / 1000000.0).toLong
+          val p2 = math.floor((1000000L - k6) * pp / 1000000.0).toLong
+          val z6 = math.floor(err / math.sqrt((pp + Rc).toDouble) *
+            1000000.0 + 0.5).toLong
+          out += KalmanOut(key._1, key._2, e.event_id, e.ts,
+            vl / 10000.0, l2 / 10000.0, Some(k6 / 1000000.0),
+            Some(err / 10000.0), Some(z6 / 1000000.0),
+            if (math.abs(z6) >= 3000000L) 1 else 0)
+          KalmanState(usOf(e.ts), l2, p2)
       }
-    }
-
-    perTicker(stream)(update)
+    })
   }
 
   /** st15 per-ticker streaming trend state: the last `window`
@@ -682,147 +725,91 @@ object StreamingAnomaly extends Serializable {
       staleDays: Double = 8.0,
       window: Int = 16): org.apache.spark.sql.Dataset[TrendOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[TrendState]): Iterator[TrendOut] = {
-      if (state.hasTimedOut) {
-        state.remove() // quiet ticker: window gone, key evicted
-        Iterator.empty
+    // a new segment's window starts empty
+    val empty = TrendState(0L, Array.empty[Long], Array.empty[Long])
+    perTicker(stream)(segments[Ticker, TrendState, TrendOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      val st = prev.getOrElse(empty)
+      val ts2 = (st.tus :+ usOf(e.ts)).takeRight(window)
+      val vs2 = (st.v4l :+ vl).takeRight(window)
+      val m = ts2.length
+      if (m < 2) {
+        out += TrendOut(key._1, key._2, e.event_id, e.ts,
+          vl / 10000.0, m, None, None, None)
       } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[TrendOut]
-        var st = state.getOption.getOrElse(
-          TrendState(0L, Array.empty[Long], Array.empty[Long]))
-        sorted.foreach { e =>
-          // in-data staleness gap: the window restarts empty
-          if (st.tus.nonEmpty && usOf(e.ts) - st.lastUs > staleUs)
-            st = TrendState(0L, Array.empty[Long], Array.empty[Long])
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          val ts2 = (st.tus :+ usOf(e.ts)).takeRight(window)
-          val vs2 = (st.v4l :+ vl).takeRight(window)
-          st = TrendState(usOf(e.ts), ts2, vs2)
-          val m = ts2.length
-          if (m < 2) {
-            out += TrendOut(key._1, key._2, e.event_id, e.ts,
-              vl / 10000.0, m, None, None, None)
-          } else {
-            // q64's exact pairwise pass over the bounded window
-            var sStat = 0L
-            val slopes = Vector.newBuilder[Double]
-            var i = 0
-            while (i < m) {
-              var j = i + 1
-              while (j < m) {
-                val dv = vs2(j) - vs2(i)
-                sStat += java.lang.Long.signum(dv)
-                val dt = ts2(j) - ts2(i)
-                if (dt != 0L) slopes += dv.toDouble / dt.toDouble
-                j += 1
-              }
-              i += 1
-            }
-            val np = m.toLong * (m - 1) / 2
-            val tau6 = math.floor(sStat * 1000000.0 / np + 0.5).toLong
-            val sl = slopes.result().sorted
-            val sen = if (sl.isEmpty) None
-              else Some(sl((sl.size + 1) / 2 - 1) * 8.64e6)
-            out += TrendOut(key._1, key._2, e.event_id, e.ts,
-              vl / 10000.0, m, Some(sStat), Some(tau6 / 1000000.0), sen)
+        // q64's exact pairwise pass over the bounded window
+        var sStat = 0L
+        val slopes = Vector.newBuilder[Double]
+        var i = 0
+        while (i < m) {
+          var j = i + 1
+          while (j < m) {
+            val dv = vs2(j) - vs2(i)
+            sStat += java.lang.Long.signum(dv)
+            val dt = ts2(j) - ts2(i)
+            if (dt != 0L) slopes += dv.toDouble / dt.toDouble
+            j += 1
           }
+          i += 1
         }
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
+        val np = m.toLong * (m - 1) / 2
+        val tau6 = math.floor(sStat * 1000000.0 / np + 0.5).toLong
+        val sl = slopes.result().sorted
+        val sen = if (sl.isEmpty) None
+          else Some(sl((sl.size + 1) / 2 - 1) * 8.64e6)
+        out += TrendOut(key._1, key._2, e.event_id, e.ts,
+          vl / 10000.0, m, Some(sStat), Some(tau6 / 1000000.0), sen)
       }
-    }
-
-    perTicker(stream)(update)
+      TrendState(usOf(e.ts), ts2, vs2)
+    })
   }
 
   def st15FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0, window: Int = 16): DataFrame =
-    collect(s, "st15", st15Transform(s, stream, staleDays, window))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("n_window"),
-        col("mk_s"), col("mk_tau6"), col("sen_slope_day"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st15", st15Transform(s, stream, staleDays, window))(
+      "value", "n_window", "mk_s", "mk_tau6", "sen_slope_day")
 
   def st14FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st14", st14Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("level"),
-        col("kgain6"), col("innovation"), col("kalman_z6"),
-        col("kalman_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st14", st14Transform(s, stream, staleDays))("value",
+      "level", "kgain6", "innovation", "kalman_z6", "kalman_flag")
 
   def st08Transform(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): org.apache.spark.sql.Dataset[CusumOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
     val slack = 500000L // k = 0.5 sigma in 1e6 fixed point
     val thresh = 5000000L // h = 5 sigma
-
-    val limb = BigInt(1000000000000000000L) // 1e18
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[CusumState]): Iterator[CusumOut] = {
-      if (state.hasTimedOut) {
-        state.remove() // quiet ticker: baseline gone, key evicted
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[CusumOut]
-        var st = state.getOption
-          .getOrElse(CusumState(0L, 0L, 0L, 0L, 0L, 0L, 0L))
-        sorted.foreach { e =>
-          // in-data staleness gap: same baseline restart the timeout
-          // path would have caused had the key stayed quiet
-          if (st.n > 0 && usOf(e.ts) - st.lastUs > staleUs)
-            st = CusumState(0L, 0L, 0L, 0L, 0L, 0L, 0L)
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          val n = st.n + 1
-          val s1 = st.s1 + vl
-          // exact integer moments in BigInt; s2 round-trips through the
-          // two-limb state representation losslessly
-          val s2 = BigInt(st.s2Hi) * limb + st.s2Lo + BigInt(vl) * BigInt(vl)
-          val c = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
-          val zf =
-            if (n > 1 && c > 0) {
-              val a = (n * vl - s1).toDouble
-              math.floor(a / math.sqrt(c.toDouble * n / (n - 1)) *
-                1000000.0 + 0.5).toLong
-            } else 0L
-          val sPos = math.max(0L, st.sPos + zf - slack)
-          val sNeg = math.max(0L, st.sNeg - zf - slack)
-          st = CusumState(usOf(e.ts), n, s1, (s2 / limb).toLong,
-            (s2 % limb).toLong, sPos, sNeg)
-          out += CusumOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
-            zf / 1000000.0, sPos / 1000000.0, sNeg / 1000000.0,
-            if (sPos > thresh || sNeg > thresh) 1 else 0)
-        }
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
-      }
-    }
-
-    perTicker(stream)(update)
+    // a new segment restarts the baseline
+    val empty = CusumState(0L, 0L, 0L, 0L, 0L, 0L, 0L)
+    perTicker(stream)(segments[Ticker, CusumState, CusumOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      val st = prev.getOrElse(empty)
+      val n = st.n + 1
+      val s1 = st.s1 + vl
+      // exact integer moments in BigInt; s2 round-trips through the
+      // two-limb state representation losslessly
+      val s2 = fromLimbs(st.s2Hi, st.s2Lo) + BigInt(vl) * BigInt(vl)
+      val c = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
+      val zf =
+        if (n > 1 && c > 0) {
+          val a = (n * vl - s1).toDouble
+          math.floor(a / math.sqrt(c.toDouble * n / (n - 1)) *
+            1000000.0 + 0.5).toLong
+        } else 0L
+      val sPos = math.max(0L, st.sPos + zf - slack)
+      val sNeg = math.max(0L, st.sNeg - zf - slack)
+      out += CusumOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
+        zf / 1000000.0, sPos / 1000000.0, sNeg / 1000000.0,
+        if (sPos > thresh || sNeg > thresh) 1 else 0)
+      val (s2Hi, s2Lo) = toLimbs(s2)
+      CusumState(usOf(e.ts), n, s1, s2Hi, s2Lo, sPos, sNeg)
+    })
   }
 
   def st08FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st08", st08Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("zscore6"),
-        col("cusum_pos"), col("cusum_neg"), col("changepoint_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st08", st08Transform(s, stream, staleDays))("value",
+      "zscore6", "cusum_pos", "cusum_neg", "changepoint_flag")
 
   /** st10 SpaceSaving counter bank for one tumbling window: parallel
     * arrays (primitive encoders, TickerState's lesson), capacity-k
@@ -873,14 +860,13 @@ object StreamingAnomaly extends Serializable {
               st.total)
           }
       } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
         val st = state.getOption
           .getOrElse(SSState(Array.empty, Array.empty, Array.empty, 0L))
         val keys = scala.collection.mutable.ArrayBuffer(st.keys: _*)
         val counts = scala.collection.mutable.ArrayBuffer(st.counts: _*)
         val errs = scala.collection.mutable.ArrayBuffer(st.errs: _*)
         var total = st.total
-        sorted.foreach { e =>
+        inOrder(events).foreach { e =>
           total += 1
           val idx = keys.indexOf(e.user_id)
           if (idx >= 0) counts(idx) += 1
@@ -941,7 +927,7 @@ object StreamingAnomaly extends Serializable {
       : org.apache.spark.sql.Dataset[QuantOut] = {
     import s.implicits._
     val winUs = 6L * 3600 * 1000000L
-    val dom4 = math.floor(domainMax * 10000.0 + 0.5).toLong
+    val dom4 = scale4(domainMax, "domainMax")
     val width = math.max(1L, dom4 / buckets)
 
     def update(key: (String, Long), events: Iterator[TickEvent],
@@ -977,7 +963,7 @@ object StreamingAnomaly extends Serializable {
         var mx = st.maxV4
         var nOut = st.nOut
         evs.foreach { e =>
-          val v4 = math.floor(e.value * 10000.0 + 0.5).toLong
+          val v4 = scale4(e.value, key, e.event_id)
           // out-of-domain values ([0, domainMax] is CLOSED — the
           // endpoint belongs to the top bucket) clamp into the edge
           // buckets — count them so the one-bucket-width error bound
@@ -1027,7 +1013,7 @@ object StreamingAnomaly extends Serializable {
     */
   def st13Reference(s: SparkSession, dir: String, buckets: Int = 10,
       domainMax: Double = 1000.0): Map[String, Array[Long]] = {
-    val dom4 = math.floor(domainMax * 10000.0 + 0.5).toLong
+    val dom4 = scale4(domainMax, "domainMax")
     val width = math.max(1L, dom4 / buckets)
     val ev = graft.Tables.events(s, dir)
       .select(col("event_type"), to_date(col("ts")).as("day"),
@@ -1067,7 +1053,7 @@ object StreamingAnomaly extends Serializable {
       : org.apache.spark.sql.Dataset[DriftOut] = {
     import s.implicits._
     val winUs = 6L * 3600 * 1000000L
-    val dom4 = math.floor(domainMax * 10000.0 + 0.5).toLong
+    val dom4 = scale4(domainMax, "domainMax")
     val width = math.max(1L, dom4 / buckets)
 
     def update(key: (String, Long), events: Iterator[TickEvent],
@@ -1096,7 +1082,7 @@ object StreamingAnomaly extends Serializable {
         val counts = st.counts.clone()
         var total = st.total
         evs.foreach { e =>
-          val v4 = math.floor(e.value * 10000.0 + 0.5).toLong
+          val v4 = scale4(e.value, key, e.event_id)
           val b = math.min(buckets - 1L, math.max(0L, v4 / width)).toInt
           counts(b) += 1
           total += 1
@@ -1185,7 +1171,7 @@ object StreamingAnomaly extends Serializable {
         var total = st.total
         var nSkip = st.nOut
         evs.foreach { e =>
-          val v4 = math.floor(e.value * 10000.0 + 0.5).toLong
+          val v4 = scale4(e.value, key, e.event_id)
           if (v4 <= 0L) nSkip += 1
           else {
             var x = v4
@@ -1250,7 +1236,7 @@ object StreamingAnomaly extends Serializable {
             Long.MaxValue, Long.MinValue, Long.MinValue, 0L, 0L))
         events.foreach { e =>
           val us = usOf(e.ts)
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
+          val vl = scale4(e.value, key, e.event_id)
           var (oUs, oEid, oV) = (st.oUs, st.oEid, st.oV)
           if (us < oUs || (us == oUs && e.event_id < oEid)) {
             oUs = us; oEid = e.event_id; oV = vl
@@ -1339,88 +1325,60 @@ object StreamingAnomaly extends Serializable {
   def st17Transform(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): org.apache.spark.sql.Dataset[HwOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-    val limb = BigInt(1000000000000000000L) // 1e18
     val Unseen = Long.MinValue
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[HwState]): Iterator[HwOut] = {
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[HwOut]
-        var stOpt = state.getOption
-        sorted.foreach { e =>
-          stOpt = stOpt.filter(st => usOf(e.ts) - st.lastUs <= staleUs)
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          stOpt match {
-            case None =>
-              val ring = Array.fill(7)(Unseen)
-              ring(0) = 0L // s = v − l' = 0 at the segment seed
-              stOpt = Some(HwState(usOf(e.ts), vl, 0L, 1L, ring,
-                0L, 0L, 0L, 0L))
-              out += HwOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
-                None, None, None, None, 0)
-            case Some(st) =>
-              val ph = (st.idx % 7).toInt
-              val sp = st.season(ph)
-              val ring = st.season.clone()
-              if (sp == Unseen) {
-                // q67's warm-up: non-seasonal level step, seed phase
-                val l2 = math.floor((vl + st.l + st.b) / 2.0).toLong
-                val b2 = math.floor((l2 - st.l + 3.0 * st.b) / 4.0).toLong
-                ring(ph) = vl - l2
-                stOpt = Some(HwState(usOf(e.ts), l2, b2, st.idx + 1, ring,
-                  st.n, st.s1, st.s2Hi, st.s2Lo))
-                out += HwOut(key._1, key._2, e.event_id, e.ts,
-                  vl / 10000.0, None, None, None, None, 0)
-              } else {
-                val pred = st.l + st.b + sp
-                val err = vl - pred
-                val n = st.n + 1
-                val s1 = st.s1 + err
-                val s2 = BigInt(st.s2Hi) * limb + st.s2Lo +
-                  BigInt(err) * BigInt(err)
-                val c = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
-                val z6 =
-                  if (n > 1 && c > 0) {
-                    val a = (BigInt(n) * BigInt(err) - BigInt(s1)).toDouble
-                    math.floor(a / math.sqrt(c.toDouble * n / (n - 1)) *
-                      1000000.0 + 0.5).toLong
-                  } else 0L
-                val l2 = math.floor((vl - sp + st.l + st.b) / 2.0).toLong
-                val b2 = math.floor((l2 - st.l + 3.0 * st.b) / 4.0).toLong
-                ring(ph) = math.floor((vl - l2 + 3.0 * sp) / 4.0).toLong
-                stOpt = Some(HwState(usOf(e.ts), l2, b2, st.idx + 1, ring,
-                  n, s1, (s2 / limb).toLong, (s2 % limb).toLong))
-                out += HwOut(key._1, key._2, e.event_id, e.ts,
-                  vl / 10000.0, Some(pred / 10000.0), Some(err / 10000.0),
-                  Some(sp / 10000.0), Some(z6 / 1000000.0),
-                  if (math.abs(z6) >= 3000000L) 1 else 0)
-              }
+    perTicker(stream)(segments[Ticker, HwState, HwOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      prev match {
+        case None =>
+          val ring = Array.fill(7)(Unseen)
+          ring(0) = 0L // s = v − l' = 0 at the segment seed
+          out += HwOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
+            None, None, None, None, 0)
+          HwState(usOf(e.ts), vl, 0L, 1L, ring, 0L, 0L, 0L, 0L)
+        case Some(st) =>
+          val ph = (st.idx % 7).toInt
+          val sp = st.season(ph)
+          val ring = st.season.clone()
+          if (sp == Unseen) {
+            // q67's warm-up: non-seasonal level step, seed phase
+            val l2 = math.floor((vl + st.l + st.b) / 2.0).toLong
+            val b2 = math.floor((l2 - st.l + 3.0 * st.b) / 4.0).toLong
+            ring(ph) = vl - l2
+            out += HwOut(key._1, key._2, e.event_id, e.ts,
+              vl / 10000.0, None, None, None, None, 0)
+            HwState(usOf(e.ts), l2, b2, st.idx + 1, ring,
+              st.n, st.s1, st.s2Hi, st.s2Lo)
+          } else {
+            val pred = st.l + st.b + sp
+            val err = vl - pred
+            val n = st.n + 1
+            val s1 = st.s1 + err
+            val s2 = fromLimbs(st.s2Hi, st.s2Lo) + BigInt(err) * BigInt(err)
+            val c = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
+            val z6 =
+              if (n > 1 && c > 0) {
+                val a = (BigInt(n) * BigInt(err) - BigInt(s1)).toDouble
+                math.floor(a / math.sqrt(c.toDouble * n / (n - 1)) *
+                  1000000.0 + 0.5).toLong
+              } else 0L
+            val l2 = math.floor((vl - sp + st.l + st.b) / 2.0).toLong
+            val b2 = math.floor((l2 - st.l + 3.0 * st.b) / 4.0).toLong
+            ring(ph) = math.floor((vl - l2 + 3.0 * sp) / 4.0).toLong
+            out += HwOut(key._1, key._2, e.event_id, e.ts,
+              vl / 10000.0, Some(pred / 10000.0), Some(err / 10000.0),
+              Some(sp / 10000.0), Some(z6 / 1000000.0),
+              if (math.abs(z6) >= 3000000L) 1 else 0)
+            val (s2Hi, s2Lo) = toLimbs(s2)
+            HwState(usOf(e.ts), l2, b2, st.idx + 1, ring, n, s1, s2Hi, s2Lo)
           }
-        }
-        val st = stOpt.get
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
       }
-    }
-
-    perTicker(stream)(update)
+    })
   }
 
   def st17FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st17", st17Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("forecast"),
-        col("resid"), col("season"), col("hw_z6"), col("hw_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st17", st17Transform(s, stream, staleDays))("value",
+      "forecast", "resid", "season", "hw_z6", "hw_flag")
 
   def st17StreamHoltWinters(s: SparkSession, dir: String): DataFrame =
     st17FromStream(s, eventStream(s, dir))
@@ -1463,10 +1421,9 @@ object StreamingAnomaly extends Serializable {
 
     def update(key: (Long, String), events: Iterator[TickEvent],
         state: GroupState[GapState]): Iterator[GapOut] = {
-      val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
       val out = Vector.newBuilder[GapOut]
       var last = state.getOption.map(_.lastUs)
-      sorted.foreach { e =>
+      inOrder(events).foreach { e =>
         val us = usOf(e.ts)
         last match {
           case None =>
@@ -1490,12 +1447,8 @@ object StreamingAnomaly extends Serializable {
 
   def st18FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st18", st18Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("gap_us"),
-        col("gap_days6"), col("stale_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st18", st18Transform(s, stream, staleDays))("value",
+      "gap_us", "gap_days6", "stale_flag")
 
   def st18StreamGap(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -1527,55 +1480,30 @@ object StreamingAnomaly extends Serializable {
       staleDays: Double = 8.0, delta: Double = 0.05,
       lambda: Double = 5.0): org.apache.spark.sql.Dataset[PhOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-    val d4 = math.floor(delta * 10000.0 + 0.5)
+    val d4 = scale4(delta, "delta").toDouble
     val l9 = math.floor(lambda * 1e9 + 0.5).toLong
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[PhState]): Iterator[PhOut] = {
-      if (state.hasTimedOut) {
-        state.remove() // quiet ticker: statistics gone, key evicted
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[PhOut]
-        var st = state.getOption.getOrElse(
-          PhState(Long.MinValue, 0L, 0L, 0L, Long.MaxValue))
-        sorted.foreach { e =>
-          // in-data staleness gap: same restart the timeout path
-          // would have caused had the key stayed quiet
-          if (st.n > 0 && usOf(e.ts) - st.lastUs > staleUs)
-            st = PhState(Long.MinValue, 0L, 0L, 0L, Long.MaxValue)
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          val n = st.n + 1
-          val s1 = st.s1 + vl
-          val c9 = math.floor(
-            (vl - s1.toDouble / n - d4) * 100000.0 + 0.5).toLong
-          val m = st.m + c9
-          val minm = math.min(st.minm, m)
-          val ph9 = m - minm
-          st = PhState(usOf(e.ts), n, s1, m, minm)
-          out += PhOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
-            ph9, if (ph9 > l9) 1 else 0)
-        }
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
-      }
-    }
-
-    perTicker(stream)(update)
+    // a new segment re-learns its mean
+    val empty = PhState(Long.MinValue, 0L, 0L, 0L, Long.MaxValue)
+    perTicker(stream)(segments[Ticker, PhState, PhOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      val st = prev.getOrElse(empty)
+      val n = st.n + 1
+      val s1 = st.s1 + vl
+      val c9 = math.floor(
+        (vl - s1.toDouble / n - d4) * 100000.0 + 0.5).toLong
+      val m = st.m + c9
+      val minm = math.min(st.minm, m)
+      val ph9 = m - minm
+      out += PhOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
+        ph9, if (ph9 > l9) 1 else 0)
+      PhState(usOf(e.ts), n, s1, m, minm)
+    })
   }
 
   def st19FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st19", st19Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("ph9"),
-        col("ph_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st19", st19Transform(s, stream, staleDays))("value",
+      "ph9", "ph_flag")
 
   def st19StreamPageHinkley(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -1609,76 +1537,51 @@ object StreamingAnomaly extends Serializable {
   def st25Transform(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): org.apache.spark.sql.Dataset[VrOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-    val limb = BigInt(1000000000000000000L) // 1e18
-
-    def empty = VrState(Long.MinValue, Array.empty[Long],
+    val empty = VrState(Long.MinValue, Array.empty[Long],
       0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[VrState]): Iterator[VrOut] = {
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[VrOut]
-        var st = state.getOption.getOrElse(empty)
-        sorted.foreach { e =>
-          if (st.ring.nonEmpty && usOf(e.ts) - st.lastUs > staleUs)
-            st = empty
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          var n1 = st.n1; var s11 = st.s11
-          var s21 = BigInt(st.s21Hi) * limb + st.s21Lo
-          var nq = st.nq; var s1q = st.s1q
-          var s2q = BigInt(st.s2qHi) * limb + st.s2qLo
-          if (st.ring.nonEmpty) {
-            val r1 = vl - st.ring.last
-            n1 += 1; s11 += r1; s21 += BigInt(r1) * r1
-          }
-          if (st.ring.length == 4) {
-            val rq = vl - st.ring.head
-            nq += 1; s1q += rq; s2q += BigInt(rq) * rq
-          }
-          val vr6 =
-            if (nq >= 2) {
-              val num = BigInt(nq) * s2q - BigInt(s1q) * BigInt(s1q)
-              val den = BigInt(n1) * s21 - BigInt(s11) * BigInt(s11)
-              if (den > 0)
-                Some(math.floor(
-                  (num.toDouble / (nq * (nq - 1)).toDouble) /
-                    (4.0 * (den.toDouble / (n1 * (n1 - 1)).toDouble)) *
-                    1000000.0 + 0.5).toLong)
-              else None
-            } else None
-          st = VrState(usOf(e.ts), (st.ring :+ vl).takeRight(4),
-            n1, s11, (s21 / limb).toLong, (s21 % limb).toLong,
-            nq, s1q, (s2q / limb).toLong, (s2q % limb).toLong)
-          out += VrOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
-            vr6, vr6 match {
-              case Some(v) if v > 1200000L => 1
-              case Some(v) if v < 800000L  => -1
-              case _                       => 0
-            })
-        }
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
+    perTicker(stream)(segments[Ticker, VrState, VrOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      val st = prev.getOrElse(empty)
+      var n1 = st.n1; var s11 = st.s11
+      var s21 = fromLimbs(st.s21Hi, st.s21Lo)
+      var nq = st.nq; var s1q = st.s1q
+      var s2q = fromLimbs(st.s2qHi, st.s2qLo)
+      if (st.ring.nonEmpty) {
+        val r1 = vl - st.ring.last
+        n1 += 1; s11 += r1; s21 += BigInt(r1) * r1
       }
-    }
-
-    perTicker(stream)(update)
+      if (st.ring.length == 4) {
+        val rq = vl - st.ring.head
+        nq += 1; s1q += rq; s2q += BigInt(rq) * rq
+      }
+      val vr6 =
+        if (nq >= 2) {
+          val num = BigInt(nq) * s2q - BigInt(s1q) * BigInt(s1q)
+          val den = BigInt(n1) * s21 - BigInt(s11) * BigInt(s11)
+          if (den > 0)
+            Some(math.floor(
+              (num.toDouble / (nq * (nq - 1)).toDouble) /
+                (4.0 * (den.toDouble / (n1 * (n1 - 1)).toDouble)) *
+                1000000.0 + 0.5).toLong)
+          else None
+        } else None
+      out += VrOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
+        vr6, vr6 match {
+          case Some(v) if v > 1200000L => 1
+          case Some(v) if v < 800000L  => -1
+          case _                       => 0
+        })
+      val (s21Hi, s21Lo) = toLimbs(s21)
+      val (s2qHi, s2qLo) = toLimbs(s2q)
+      VrState(usOf(e.ts), (st.ring :+ vl).takeRight(4),
+        n1, s11, s21Hi, s21Lo, nq, s1q, s2qHi, s2qLo)
+    })
   }
 
   def st25FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st25", st25Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("vr6"),
-        col("vr_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st25", st25Transform(s, stream, staleDays))("value",
+      "vr6", "vr_flag")
 
   def st25StreamVr(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -1718,83 +1621,57 @@ object StreamingAnomaly extends Serializable {
       staleDays: Double = 8.0, minObs: Long = 12L):
       org.apache.spark.sql.Dataset[AdfOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-    val limb = BigInt(1000000000000000000L) // 1e18
-
-    def empty = AdfState(Long.MinValue, 0L, 0L,
+    val empty = AdfState(Long.MinValue, 0L, 0L,
       0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[AdfState]): Iterator[AdfOut] = {
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[AdfOut]
-        var st = state.getOption.getOrElse(empty)
-        sorted.foreach { e =>
-          if (st.nVals > 0 && usOf(e.ts) - st.lastUs > staleUs)
-            st = empty
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          var m = st.m; var s1 = st.s1; var sd = st.sd
-          var s11 = BigInt(st.s11Hi) * limb + st.s11Lo
-          var s1d = BigInt(st.s1dHi) * limb + st.s1dLo
-          var sdd = BigInt(st.sddHi) * limb + st.sddLo
-          if (st.nVals > 0) {
-            val y1 = st.lastV; val dy = vl - y1
-            m += 1; s1 += y1; sd += dy
-            s11 += BigInt(y1) * y1
-            s1d += BigInt(y1) * dy
-            sdd += BigInt(dy) * dy
-          }
-          // q113's exact chain over the moments seen so far
-          val den = BigInt(m) * s11 - BigInt(s1) * BigInt(s1)
-          val (rho6, adfT6) =
-            if (m >= minObs && den > 0) {
-              val num = BigInt(m) * s1d - BigInt(s1) * BigInt(sd)
-              val rho = num.toDouble / den.toDouble
-              val alpha =
-                (sd.toDouble - rho * s1.toDouble) / m.toDouble
-              val rss = sdd.toDouble - alpha * sd.toDouble -
-                rho * s1d.toDouble
-              val r6 = Some(math.floor(rho * 1000000.0 + 0.5).toLong)
-              if (rss > 0) {
-                val t = rho / math.sqrt(
-                  rss / (m.toDouble - 2.0) * m.toDouble / den.toDouble)
-                (r6, Some(math.floor(t * 1000000.0 + 0.5).toLong))
-              } else (r6, None)
-            } else (None, None)
-          st = AdfState(usOf(e.ts), vl, st.nVals + 1,
-            m, s1, sd,
-            (s11 / limb).toLong, (s11 % limb).toLong,
-            (s1d / limb).toLong, (s1d % limb).toLong,
-            (sdd / limb).toLong, (sdd % limb).toLong)
-          out += AdfOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
-            m, rho6, adfT6,
-            adfT6 match {
-              case Some(t) if t < -2860000L => 1
-              case _                        => 0
-            })
-        }
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
+    perTicker(stream)(segments[Ticker, AdfState, AdfOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      val st = prev.getOrElse(empty)
+      var m = st.m; var s1 = st.s1; var sd = st.sd
+      var s11 = fromLimbs(st.s11Hi, st.s11Lo)
+      var s1d = fromLimbs(st.s1dHi, st.s1dLo)
+      var sdd = fromLimbs(st.sddHi, st.sddLo)
+      if (st.nVals > 0) {
+        val y1 = st.lastV; val dy = vl - y1
+        m += 1; s1 += y1; sd += dy
+        s11 += BigInt(y1) * y1
+        s1d += BigInt(y1) * dy
+        sdd += BigInt(dy) * dy
       }
-    }
-
-    perTicker(stream)(update)
+      // q113's exact chain over the moments seen so far
+      val den = BigInt(m) * s11 - BigInt(s1) * BigInt(s1)
+      val (rho6, adfT6) =
+        if (m >= minObs && den > 0) {
+          val num = BigInt(m) * s1d - BigInt(s1) * BigInt(sd)
+          val rho = num.toDouble / den.toDouble
+          val alpha =
+            (sd.toDouble - rho * s1.toDouble) / m.toDouble
+          val rss = sdd.toDouble - alpha * sd.toDouble -
+            rho * s1d.toDouble
+          val r6 = Some(math.floor(rho * 1000000.0 + 0.5).toLong)
+          if (rss > 0) {
+            val t = rho / math.sqrt(
+              rss / (m.toDouble - 2.0) * m.toDouble / den.toDouble)
+            (r6, Some(math.floor(t * 1000000.0 + 0.5).toLong))
+          } else (r6, None)
+        } else (None, None)
+      out += AdfOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
+        m, rho6, adfT6,
+        adfT6 match {
+          case Some(t) if t < -2860000L => 1
+          case _                        => 0
+        })
+      val (s11Hi, s11Lo) = toLimbs(s11)
+      val (s1dHi, s1dLo) = toLimbs(s1d)
+      val (sddHi, sddLo) = toLimbs(sdd)
+      AdfState(usOf(e.ts), vl, st.nVals + 1, m, s1, sd,
+        s11Hi, s11Lo, s1dHi, s1dLo, sddHi, sddLo)
+    })
   }
 
   def st31FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st31", st31Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("n_trans"),
-        col("rho6"), col("adf_t6"), col("stationary_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st31", st31Transform(s, stream, staleDays))("value",
+      "n_trans", "rho6", "adf_t6", "stationary_flag")
 
   def st31StreamAdf(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -1825,7 +1702,6 @@ object StreamingAnomaly extends Serializable {
       : org.apache.spark.sql.Dataset[TwapOut] = {
     import s.implicits._
     val dayUs = 86400000000L
-    val limb = BigInt(1000000000000000000L) // 1e18
 
     def update(key: (Long, String, Long), events: Iterator[TickEvent],
         state: GroupState[TwapState]): Iterator[TwapOut] = {
@@ -1833,25 +1709,23 @@ object StreamingAnomaly extends Serializable {
         val st = state.get
         state.remove()
         val dayEnd = key._3 + dayUs
-        val acc = BigInt(st.accHi) * limb + st.accLo +
+        val acc = fromLimbs(st.accHi, st.accLo) +
           BigInt(st.lastV) * (dayEnd - st.lastUs)
         val twap4 = (acc / (dayEnd - st.firstUs)).toLong
         Iterator.single(TwapOut(new java.sql.Timestamp(key._3 / 1000L),
           key._1, key._2, st.n, twap4, twap4 / 10000.0))
       } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
         var st = state.getOption.getOrElse(
           TwapState(Long.MinValue, Long.MinValue, 0L, 0L, 0L, 0L))
-        sorted.foreach { e =>
+        inOrder(events).foreach { e =>
           val us = usOf(e.ts)
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
+          val vl = scale4(e.value, key, e.event_id)
           if (st.n == 0L) {
             st = TwapState(us, us, vl, 0L, 0L, 1L)
           } else {
-            val acc = BigInt(st.accHi) * limb + st.accLo +
-              BigInt(st.lastV) * (us - st.lastUs)
-            st = TwapState(st.firstUs, us, vl,
-              (acc / limb).toLong, (acc % limb).toLong, st.n + 1)
+            val (accHi, accLo) = toLimbs(fromLimbs(st.accHi, st.accLo) +
+              BigInt(st.lastV) * (us - st.lastUs))
+            st = TwapState(st.firstUs, us, vl, accHi, accLo, st.n + 1)
           }
         }
         state.update(st)
@@ -1899,73 +1773,44 @@ object StreamingAnomaly extends Serializable {
   def st21Transform(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): org.apache.spark.sql.Dataset[SpcOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-    val limb = BigInt(1000000000000000000L) // 1e18
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[SpcState]): Iterator[SpcOut] = {
-      if (state.hasTimedOut) {
-        state.remove() // quiet ticker: chart gone, key evicted
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[SpcOut]
-        var st = state.getOption
-          .getOrElse(SpcState(0L, 0L, 0L, 0L, 0L, Array.empty[Long]))
-        sorted.foreach { e =>
-          // in-data staleness gap: same segment restart the timeout
-          // path would have caused had the key stayed quiet
-          if (st.n > 0 && usOf(e.ts) - st.lastUs > staleUs)
-            st = SpcState(0L, 0L, 0L, 0L, 0L, Array.empty[Long])
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          val n = st.n + 1
-          val s1 = st.s1 + vl
-          val s2 = BigInt(st.s2Hi) * limb + st.s2Lo + BigInt(vl) * BigInt(vl)
-          val c = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
-          val zf =
-            if (n > 1 && c > 0) {
-              val a = (n * vl - s1).toDouble
-              math.floor(a / math.sqrt(c.toDouble * n / (n - 1)) *
-                1000000.0 + 0.5).toLong
-            } else 0L
-          def zone(win: Int, lim: Long, need: Int): Boolean = {
-            val w = st.ring.takeRight(win - 1) :+ zf
-            n >= win && (w.count(_ > lim) >= need ||
-              w.count(_ < -lim) >= need)
-          }
-          val r1 = if (math.abs(zf) > 3000000L) 1 else 0
-          val r2 = if (zone(3, 2000000L, 2)) 1 else 0
-          val r3 = if (zone(5, 1000000L, 4)) 1 else 0
-          val r4 = if (n >= 8 && {
-            val w = st.ring.takeRight(7) :+ zf
-            w.forall(_ > 0L) || w.forall(_ < 0L)
-          }) 1 else 0
-          val ring2 = (st.ring :+ zf).takeRight(7)
-          st = SpcState(usOf(e.ts), n, s1, (s2 / limb).toLong,
-            (s2 % limb).toLong, ring2)
-          out += SpcOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
-            zf / 1000000.0, r1, r2, r3, r4,
-            if (r1 + r2 + r3 + r4 > 0) 1 else 0)
-        }
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
+    val empty = SpcState(0L, 0L, 0L, 0L, 0L, Array.empty[Long])
+    perTicker(stream)(segments[Ticker, SpcState, SpcOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      val st = prev.getOrElse(empty)
+      val n = st.n + 1
+      val s1 = st.s1 + vl
+      val s2 = fromLimbs(st.s2Hi, st.s2Lo) + BigInt(vl) * BigInt(vl)
+      val c = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
+      val zf =
+        if (n > 1 && c > 0) {
+          val a = (n * vl - s1).toDouble
+          math.floor(a / math.sqrt(c.toDouble * n / (n - 1)) *
+            1000000.0 + 0.5).toLong
+        } else 0L
+      def zone(win: Int, lim: Long, need: Int): Boolean = {
+        val w = st.ring.takeRight(win - 1) :+ zf
+        n >= win && (w.count(_ > lim) >= need ||
+          w.count(_ < -lim) >= need)
       }
-    }
-
-    perTicker(stream)(update)
+      val r1 = if (math.abs(zf) > 3000000L) 1 else 0
+      val r2 = if (zone(3, 2000000L, 2)) 1 else 0
+      val r3 = if (zone(5, 1000000L, 4)) 1 else 0
+      val r4 = if (n >= 8 && {
+        val w = st.ring.takeRight(7) :+ zf
+        w.forall(_ > 0L) || w.forall(_ < 0L)
+      }) 1 else 0
+      out += SpcOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
+        zf / 1000000.0, r1, r2, r3, r4,
+        if (r1 + r2 + r3 + r4 > 0) 1 else 0)
+      val (s2Hi, s2Lo) = toLimbs(s2)
+      SpcState(usOf(e.ts), n, s1, s2Hi, s2Lo, (st.ring :+ zf).takeRight(7))
+    })
   }
 
   def st21FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st21", st21Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("zscore6"),
-        col("rule1"), col("rule2"), col("rule3"), col("rule4"),
-        col("spc_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st21", st21Transform(s, stream, staleDays))("value",
+      "zscore6", "rule1", "rule2", "rule3", "rule4", "spc_flag")
 
   def st21StreamSpc(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -1998,68 +1843,40 @@ object StreamingAnomaly extends Serializable {
   def st22Transform(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): org.apache.spark.sql.Dataset[EwmaOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-    val limb = BigInt(1000000000000000000L) // 1e18
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[EwmaState]): Iterator[EwmaOut] = {
-      if (state.hasTimedOut) {
-        state.remove() // quiet ticker: chart gone, key evicted
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[EwmaOut]
-        var stOpt = state.getOption
-        sorted.foreach { e =>
-          // in-data staleness gap: restart the segment baseline
-          stOpt = stOpt.filter(st => usOf(e.ts) - st.lastUs <= staleUs)
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          stOpt match {
-            case None =>
-              stOpt = Some(EwmaState(usOf(e.ts), vl, 0L, 0L, 0L, 0L))
-              out += EwmaOut(key._1, key._2, e.event_id, e.ts,
-                vl / 10000.0, vl / 10000.0, None, None, 0)
-            case Some(st) =>
-              val err = vl - st.l
-              val n = st.n + 1
-              val s1 = st.s1 + err
-              val s2 = BigInt(st.s2Hi) * limb + st.s2Lo +
-                BigInt(err) * BigInt(err)
-              val c = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
-              val z6 =
-                if (n > 1 && c > 0) {
-                  val a = (BigInt(n) * BigInt(err) - BigInt(s1)).toDouble
-                  Some(math.floor(a / math.sqrt(c.toDouble * n / (n - 1)) *
-                    1000000.0 + 0.5).toLong)
-                } else Some(0L)
-              val l2 = math.floor((vl + 3.0 * st.l) / 4.0).toLong
-              stOpt = Some(EwmaState(usOf(e.ts), l2, n, s1,
-                (s2 / limb).toLong, (s2 % limb).toLong))
-              out += EwmaOut(key._1, key._2, e.event_id, e.ts,
-                vl / 10000.0, l2 / 10000.0, Some(err / 10000.0),
-                z6.map(_ / 1000000.0),
-                if (z6.exists(z => math.abs(z) >= 3000000L)) 1 else 0)
-          }
-        }
-        val st = stOpt.get
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
+    perTicker(stream)(segments[Ticker, EwmaState, EwmaOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      prev match {
+        case None =>
+          out += EwmaOut(key._1, key._2, e.event_id, e.ts,
+            vl / 10000.0, vl / 10000.0, None, None, 0)
+          EwmaState(usOf(e.ts), vl, 0L, 0L, 0L, 0L)
+        case Some(st) =>
+          val err = vl - st.l
+          val n = st.n + 1
+          val s1 = st.s1 + err
+          val s2 = fromLimbs(st.s2Hi, st.s2Lo) + BigInt(err) * BigInt(err)
+          val c = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
+          val z6 =
+            if (n > 1 && c > 0) {
+              val a = (BigInt(n) * BigInt(err) - BigInt(s1)).toDouble
+              Some(math.floor(a / math.sqrt(c.toDouble * n / (n - 1)) *
+                1000000.0 + 0.5).toLong)
+            } else Some(0L)
+          val l2 = math.floor((vl + 3.0 * st.l) / 4.0).toLong
+          out += EwmaOut(key._1, key._2, e.event_id, e.ts,
+            vl / 10000.0, l2 / 10000.0, Some(err / 10000.0),
+            z6.map(_ / 1000000.0),
+            if (z6.exists(z => math.abs(z) >= 3000000L)) 1 else 0)
+          val (s2Hi, s2Lo) = toLimbs(s2)
+          EwmaState(usOf(e.ts), l2, n, s1, s2Hi, s2Lo)
       }
-    }
-
-    perTicker(stream)(update)
+    })
   }
 
   def st22FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st22", st22Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("ewma"),
-        col("resid"), col("ewma_z6"), col("ewma_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st22", st22Transform(s, stream, staleDays))("value",
+      "ewma", "resid", "ewma_z6", "ewma_flag")
 
   def st22StreamEwma(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -2094,10 +1911,9 @@ object StreamingAnomaly extends Serializable {
 
     def update(key: Long, events: Iterator[TickEvent],
         state: GroupState[FunnelState]): Iterator[FunnelOut] = {
-      val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
       val out = Vector.newBuilder[FunnelOut]
       var st = state.getOption.getOrElse(FunnelState(None, None, None))
-      sorted.foreach { e =>
+      inOrder(events).foreach { e =>
         val us = usOf(e.ts)
         if (st.t1.isEmpty && e.event_type == s1) {
           st = st.copy(t1 = Some(us))
@@ -2172,13 +1988,10 @@ object StreamingAnomaly extends Serializable {
   def st27Transform(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): org.apache.spark.sql.Dataset[EnsOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-    val limb = BigInt(1000000000000000000L) // 1e18
     val k = 500000L // CUSUM slack: 0.5 sigma in 1e6 fixed point
     val h = 5000000L // CUSUM decision threshold: 5 sigma
-
-    def empty = EnsState(Long.MinValue, 0L, 0L, 0L, 0L, 0L, 0L,
+    // a new segment restarts every detector
+    val empty = EnsState(Long.MinValue, 0L, 0L, 0L, 0L, 0L, 0L,
       Array.empty[Long])
 
     // q53's selection median: 1-indexed picks (k+1)//2 and k//2+1
@@ -2192,68 +2005,47 @@ object StreamingAnomaly extends Serializable {
       (sorted((m + 1) / 2 - 1) + sorted(m / 2)) / 2.0
     }
 
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[EnsState]): Iterator[EnsOut] = {
-      if (state.hasTimedOut) {
-        state.remove() // quiet ticker: baselines gone, key evicted
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[EnsOut]
-        var st = state.getOption.getOrElse(empty)
-        sorted.foreach { e =>
-          // in-data staleness gap: restart every detector's segment
-          if (st.n > 0 && usOf(e.ts) - st.lastUs > staleUs) st = empty
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          // detector 1: causal z against prefix moments incl. current
-          val n = st.n + 1
-          val s1 = st.s1 + vl
-          val s2 = BigInt(st.s2Hi) * limb + st.s2Lo + BigInt(vl) * vl
-          val c = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
-          val zf =
-            if (n > 1 && c > 0) {
-              val a = (BigInt(n) * BigInt(vl) - BigInt(s1)).toDouble
-              math.floor(a / math.sqrt(c.toDouble * n / (n - 1)) *
-                1000000.0 + 0.5).toLong
-            } else 0L
-          val zFlag = if (math.abs(zf) >= 3000000L) 1 else 0
-          // detector 2: CUSUM persistence on the quantized z
-          val sPos = math.max(0L, st.sPos + zf - k)
-          val sNeg = math.max(0L, st.sNeg - zf - k)
-          val cusumFlag = if (sPos > h || sNeg > h) 1 else 0
-          // detector 3: causal Hampel over the trailing <=7 prints
-          val win = st.ring :+ vl
-          val med = medLong(win.sorted)
-          val dev = math.abs(vl.toDouble - med)
-          val mad = medDouble(win.map(x => math.abs(x.toDouble - med)).sorted)
-          val hampelFlag =
-            if (mad == 0.0) { if (dev > 0.0) 1 else 0 }
-            else { if (dev > 3.0 * 1.4826 * mad) 1 else 0 }
-          val votes = zFlag + cusumFlag + hampelFlag
-          st = EnsState(usOf(e.ts), n, s1, (s2 / limb).toLong,
-            (s2 % limb).toLong, sPos, sNeg, win.takeRight(6))
-          out += EnsOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
-            zf / 1000000.0, zFlag, cusumFlag, hampelFlag, votes,
-            if (votes >= 2) 1 else 0)
-        }
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
-      }
-    }
-
-    perTicker(stream)(update)
+    perTicker(stream)(segments[Ticker, EnsState, EnsOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      val st = prev.getOrElse(empty)
+      // detector 1: causal z against prefix moments incl. current
+      val n = st.n + 1
+      val s1 = st.s1 + vl
+      val s2 = fromLimbs(st.s2Hi, st.s2Lo) + BigInt(vl) * vl
+      val c = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
+      val zf =
+        if (n > 1 && c > 0) {
+          val a = (BigInt(n) * BigInt(vl) - BigInt(s1)).toDouble
+          math.floor(a / math.sqrt(c.toDouble * n / (n - 1)) *
+            1000000.0 + 0.5).toLong
+        } else 0L
+      val zFlag = if (math.abs(zf) >= 3000000L) 1 else 0
+      // detector 2: CUSUM persistence on the quantized z
+      val sPos = math.max(0L, st.sPos + zf - k)
+      val sNeg = math.max(0L, st.sNeg - zf - k)
+      val cusumFlag = if (sPos > h || sNeg > h) 1 else 0
+      // detector 3: causal Hampel over the trailing <=7 prints
+      val win = st.ring :+ vl
+      val med = medLong(win.sorted)
+      val dev = math.abs(vl.toDouble - med)
+      val mad = medDouble(win.map(x => math.abs(x.toDouble - med)).sorted)
+      val hampelFlag =
+        if (mad == 0.0) { if (dev > 0.0) 1 else 0 }
+        else { if (dev > 3.0 * 1.4826 * mad) 1 else 0 }
+      val votes = zFlag + cusumFlag + hampelFlag
+      out += EnsOut(key._1, key._2, e.event_id, e.ts, vl / 10000.0,
+        zf / 1000000.0, zFlag, cusumFlag, hampelFlag, votes,
+        if (votes >= 2) 1 else 0)
+      val (s2Hi, s2Lo) = toLimbs(s2)
+      EnsState(usOf(e.ts), n, s1, s2Hi, s2Lo, sPos, sNeg, win.takeRight(6))
+    })
   }
 
   def st27FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st27", st27Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("zscore6"),
-        col("z_flag"), col("cusum_flag"), col("hampel_flag"),
-        col("votes"), col("ensemble_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st27", st27Transform(s, stream, staleDays))("value",
+      "zscore6", "z_flag", "cusum_flag", "hampel_flag", "votes",
+      "ensemble_flag")
 
   def st27StreamEnsemble(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -2284,60 +2076,34 @@ object StreamingAnomaly extends Serializable {
   def st28Transform(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): org.apache.spark.sql.Dataset[MacdOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[MacdState]): Iterator[MacdOut] = {
-      if (state.hasTimedOut) {
-        state.remove() // quiet ticker: levels gone, key evicted
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[MacdOut]
-        var stOpt = state.getOption
-        sorted.foreach { e =>
-          // in-data staleness gap: restart the segment baseline
-          stOpt = stOpt.filter(st => usOf(e.ts) - st.lastUs <= staleUs)
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          stOpt match {
-            case None =>
-              stOpt = Some(MacdState(usOf(e.ts), vl, vl, 0L, 0L))
-              out += MacdOut(key._1, key._2, e.event_id, e.ts,
-                vl / 10000.0, 0L, 0L, 0L, 0)
-            case Some(st) =>
-              val lf = math.floor((vl + st.lf) / 2.0).toLong
-              val ls = math.floor((vl + 7.0 * st.ls) / 8.0).toLong
-              val macd = lf - ls
-              val g = math.floor((macd + 3.0 * st.g) / 4.0).toLong
-              val hist = macd - g
-              val cross =
-                if (hist > 0 && st.prevHist <= 0) 1
-                else if (hist < 0 && st.prevHist >= 0) -1
-                else 0
-              stOpt = Some(MacdState(usOf(e.ts), lf, ls, g, hist))
-              out += MacdOut(key._1, key._2, e.event_id, e.ts,
-                vl / 10000.0, macd, g, hist, cross)
-          }
-        }
-        val st = stOpt.get
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
+    perTicker(stream)(segments[Ticker, MacdState, MacdOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      prev match {
+        case None =>
+          out += MacdOut(key._1, key._2, e.event_id, e.ts,
+            vl / 10000.0, 0L, 0L, 0L, 0)
+          MacdState(usOf(e.ts), vl, vl, 0L, 0L)
+        case Some(st) =>
+          val lf = math.floor((vl + st.lf) / 2.0).toLong
+          val ls = math.floor((vl + 7.0 * st.ls) / 8.0).toLong
+          val macd = lf - ls
+          val g = math.floor((macd + 3.0 * st.g) / 4.0).toLong
+          val hist = macd - g
+          val cross =
+            if (hist > 0 && st.prevHist <= 0) 1
+            else if (hist < 0 && st.prevHist >= 0) -1
+            else 0
+          out += MacdOut(key._1, key._2, e.event_id, e.ts,
+            vl / 10000.0, macd, g, hist, cross)
+          MacdState(usOf(e.ts), lf, ls, g, hist)
       }
-    }
-
-    perTicker(stream)(update)
+    })
   }
 
   def st28FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st28", st28Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("macd4"),
-        col("signal4"), col("hist4"), col("cross_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st28", st28Transform(s, stream, staleDays))("value",
+      "macd4", "signal4", "hist4", "cross_flag")
 
   def st28StreamMacd(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -2374,36 +2140,16 @@ object StreamingAnomaly extends Serializable {
       probs: Map[(String, String), Long], rareBelow: Long,
       staleDays: Double): org.apache.spark.sql.Dataset[TransOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-
-    def update(key: Long, events: Iterator[TickEvent],
-        state: GroupState[LastTypeState]): Iterator[TransOut] = {
-      if (state.hasTimedOut) {
-        state.remove() // idle user: 1-string state evicted
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[TransOut]
-        var stOpt = state.getOption
-        sorted.foreach { e =>
-          stOpt match {
-            case Some(st) if usOf(e.ts) - st.lastUs <= staleUs =>
-              val p6 = probs.getOrElse((st.lastType, e.event_type), 0L)
-              out += TransOut(key, e.event_id, e.ts, st.lastType,
-                e.event_type, p6, if (p6 < rareBelow) 1 else 0)
-            case _ => // first event or stale gap: no transition closes
-          }
-          stOpt = Some(LastTypeState(usOf(e.ts), e.event_type))
-        }
-        val st = stOpt.get
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
+    // a segment's first event closes no transition
+    keyed(stream)(_.user_id)(segments[Long, LastTypeState, TransOut](
+        staleDays, _.lastUs) { (key, e, _, prev, out) =>
+      prev.foreach { st =>
+        val p6 = probs.getOrElse((st.lastType, e.event_type), 0L)
+        out += TransOut(key, e.event_id, e.ts, st.lastType,
+          e.event_type, p6, if (p6 < rareBelow) 1 else 0)
       }
-    }
-
-    keyed(stream)(_.user_id)(update)
+      LastTypeState(usOf(e.ts), e.event_type)
+    })
   }
 
   def st29FromStream(s: SparkSession, stream: DataFrame,
@@ -2415,11 +2161,9 @@ object StreamingAnomaly extends Serializable {
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
       .toMap
-    collect(s, "st29", st29Transform(s, stream, probs, rareBelow, staleDays))
-      .select(col("user_id"), col("event_id"),
-        col("ts").as("date_recorded"), col("from_type"), col("to_type"),
-        col("p6"), col("rare_flag"))
-      .orderBy(col("user_id"), col("date_recorded"), col("event_id"))
+    eventRows(s, "st29",
+      st29Transform(s, stream, probs, rareBelow, staleDays),
+      Seq("user_id"))("from_type", "to_type", "p6", "rare_flag")
   }
 
   def st29StreamRareTransition(s: SparkSession, dir: String,
@@ -2467,89 +2211,39 @@ object StreamingAnomaly extends Serializable {
       staleDays: Double = 8.0)
       : org.apache.spark.sql.Dataset[IncidentOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
+    // a closed incident emits its row; a closed segment closes its
+    // open incident
+    def emit(key: Ticker, st: IncidentState, out: Out[IncidentOut]): Unit =
+      if (st.incN > 0)
+        out += IncidentOut(key._1, key._2, st.incStart, st.incEnd,
+          usOf(st.incEnd) - usOf(st.incStart), st.incN, st.peakZ,
+          st.nSd, st.nRep)
 
-    def emit(key: (Long, String), st: IncidentState): IncidentOut =
-      IncidentOut(key._1, key._2, st.incStart, st.incEnd,
-        usOf(st.incEnd) - usOf(st.incStart), st.incN, st.peakZ,
-        st.nSd, st.nRep)
-
-    def fresh(e: TickEvent, vl: Long): IncidentState =
-      IncidentState(TickerState(e.ts, e.value, vl, 1, Array.empty[Long]),
-        0L, e.ts, e.ts, 0.0, 0L, 0L)
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[IncidentState]): Iterator[IncidentOut] = {
-      if (state.hasTimedOut) {
-        val st = state.get
-        state.remove()
-        if (st.incN > 0) Iterator.single(emit(key, st)) else Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[IncidentOut]
-        var stOpt = state.getOption
-        sorted.foreach { e =>
-          // in-data staleness gap: the segment closes, and with it any
-          // open incident — same row the timeout path would emit
-          stOpt.filter(st => usOf(e.ts) - usOf(st.base.lastTs) > staleUs)
-            .foreach { st =>
-              if (st.incN > 0) out += emit(key, st)
-              stOpt = None
-            }
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          stOpt match {
-            case None =>
-              stOpt = Some(fresh(e, vl))
-            case Some(st0) =>
-              val st = st0.base
-              // st02's exact chain: long diff window, one double
-              // conversion per sum, same flags
-              val dl = math.abs(vl - st.lastScaled)
-              val newRun = if (dl == 0L) st.runLength + 1 else 1
-              val n = math.min(st.diffs.length + 1, cfg.dataPeriods)
-              val ds = new Array[Long](n)
-              ds(0) = dl
-              System.arraycopy(st.diffs, 0, ds, 1, n - 1)
-              var sumdL = 0L
-              var sumsqL = 0L
-              var j = 0
-              while (j < n) {
-                val d = ds(j); sumdL += d; sumsqL += d * d; j += 1
-              }
-              val sumd = sumdL.toDouble
-              val sumsq = sumsqL.toDouble
-              val num = sumsq - sumd * sumd / n
-              val z =
-                if (n >= 2 && num > 0)
-                  math.abs(dl.toDouble - sumd / n) /
-                    math.sqrt(num / (n - 1))
-                else 0.0
-              val sdFlag = if (z >= cfg.stddevLim) 1L else 0L
-              val repFlag = if (newRun >= cfg.repLim) 1L else 0L
-              val nb = TickerState(e.ts, e.value, vl, newRun, ds)
-              if (sdFlag == 1L || repFlag == 1L) {
-                stOpt = Some(if (st0.incN == 0L)
-                  IncidentState(nb, 1L, e.ts, e.ts, z, sdFlag, repFlag)
-                else
-                  IncidentState(nb, st0.incN + 1, st0.incStart, e.ts,
-                    math.max(st0.peakZ, z), st0.nSd + sdFlag,
-                    st0.nRep + repFlag))
-              } else {
-                if (st0.incN > 0) out += emit(key, st0)
-                stOpt = Some(IncidentState(nb, 0L, e.ts, e.ts, 0.0,
-                  0L, 0L))
-              }
+    perTicker(stream)(segments[Ticker, IncidentState, IncidentOut](
+        staleDays, st => usOf(st.base.lastTs), emit) {
+        (key, e, v4, prev, out) =>
+      prev match {
+        case None =>
+          IncidentState(seedBase(e, v4), 0L, e.ts, e.ts, 0.0, 0L, 0L)
+        case Some(st0) =>
+          // st02's exact chain and flags
+          val nb = advance(st0.base, e, v4, cfg.dataPeriods)
+          val z = zscore(nb.diffs)
+          val sdFlag = if (z >= cfg.stddevLim) 1L else 0L
+          val repFlag = if (nb.runLength >= cfg.repLim) 1L else 0L
+          if (sdFlag == 1L || repFlag == 1L) {
+            if (st0.incN == 0L)
+              IncidentState(nb, 1L, e.ts, e.ts, z, sdFlag, repFlag)
+            else
+              IncidentState(nb, st0.incN + 1, st0.incStart, e.ts,
+                math.max(st0.peakZ, z), st0.nSd + sdFlag,
+                st0.nRep + repFlag)
+          } else {
+            emit(key, st0, out)
+            IncidentState(nb, 0L, e.ts, e.ts, 0.0, 0L, 0L)
           }
-        }
-        val st = stOpt.get
-        state.update(st)
-        state.setTimeoutTimestamp(st.base.lastTs.getTime + staleMs)
-        out.result().iterator
       }
-    }
-
-    perTicker(stream)(update)
+    })
   }
 
   def st30FromStream(s: SparkSession, stream: DataFrame,
@@ -2589,65 +2283,38 @@ object StreamingAnomaly extends Serializable {
   def st32Transform(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): org.apache.spark.sql.Dataset[TurnOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[TurnState]): Iterator[TurnOut] = {
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[TurnOut]
-        var stOpt = state.getOption
-        sorted.foreach { e =>
-          stOpt = stOpt.filter(st => usOf(e.ts) - st.lastUs <= staleUs)
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          stOpt match {
-            case None =>
-              stOpt = Some(TurnState(usOf(e.ts), 0L, hasPrev2 = false,
-                vl, 1L, 0L))
-              out += TurnOut(key._1, key._2, e.event_id, e.ts,
-                vl / 10000.0, 1L, 0L, None, 0)
-            case Some(st) =>
-              val turned = st.hasPrev2 &&
-                ((st.prev2 < st.prev && st.prev > vl) ||
-                 (st.prev2 > st.prev && st.prev < vl))
-              val turns = st.turns + (if (turned) 1L else 0L)
-              val n = st.n + 1
-              val z6 =
-                if (n >= 8)
-                  Some(math.floor(
-                    (3 * turns - 2 * n + 4).toDouble /
-                      (3.0 * math.sqrt((16 * n - 29).toDouble / 90.0)) *
-                      1000000.0 + 0.5).toLong)
-                else None
-              stOpt = Some(TurnState(usOf(e.ts), st.prev,
-                hasPrev2 = true, vl, n, turns))
-              out += TurnOut(key._1, key._2, e.event_id, e.ts,
-                vl / 10000.0, n, turns, z6,
-                if (z6.exists(z => math.abs(z) > 1960000L)) 1 else 0)
-          }
-        }
-        val st = stOpt.get
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
+    perTicker(stream)(segments[Ticker, TurnState, TurnOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      prev match {
+        case None =>
+          out += TurnOut(key._1, key._2, e.event_id, e.ts,
+            vl / 10000.0, 1L, 0L, None, 0)
+          TurnState(usOf(e.ts), 0L, hasPrev2 = false, vl, 1L, 0L)
+        case Some(st) =>
+          val turned = st.hasPrev2 &&
+            ((st.prev2 < st.prev && st.prev > vl) ||
+             (st.prev2 > st.prev && st.prev < vl))
+          val turns = st.turns + (if (turned) 1L else 0L)
+          val n = st.n + 1
+          val z6 =
+            if (n >= 8)
+              Some(math.floor(
+                (3 * turns - 2 * n + 4).toDouble /
+                  (3.0 * math.sqrt((16 * n - 29).toDouble / 90.0)) *
+                  1000000.0 + 0.5).toLong)
+            else None
+          out += TurnOut(key._1, key._2, e.event_id, e.ts,
+            vl / 10000.0, n, turns, z6,
+            if (z6.exists(z => math.abs(z) > 1960000L)) 1 else 0)
+          TurnState(usOf(e.ts), st.prev, hasPrev2 = true, vl, n, turns)
       }
-    }
-
-    perTicker(stream)(update)
+    })
   }
 
   def st32FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st32", st32Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("n_obs"),
-        col("n_turns"), col("tp_z6"), col("nonrandom_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st32", st32Transform(s, stream, staleDays))("value",
+      "n_obs", "n_turns", "tp_z6", "nonrandom_flag")
 
   def st32StreamTurningPoints(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -2679,52 +2346,26 @@ object StreamingAnomaly extends Serializable {
   def st33Transform(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): org.apache.spark.sql.Dataset[DrawdownOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[DrawdownState]): Iterator[DrawdownOut] = {
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[DrawdownOut]
-        var stOpt = state.getOption
-        sorted.foreach { e =>
-          stOpt = stOpt.filter(st => usOf(e.ts) - st.lastUs <= staleUs)
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          val prev = stOpt.getOrElse(DrawdownState(0L, vl, 0L, 0L))
-          val peak = math.max(prev.peak4, vl)
-          val dd = peak - vl
-          val maxDd = math.max(prev.maxDd4, dd)
-          val uwRun = if (dd > 0) prev.uwRun + 1 else 0L
-          val frac =
-            if (peak > 0) Some(dd * 1000000L / peak) else None
-          stOpt = Some(DrawdownState(usOf(e.ts), peak, maxDd, uwRun))
-          out += DrawdownOut(key._1, key._2, e.event_id, e.ts,
-            vl / 10000.0, peak / 10000.0, dd / 10000.0, frac, uwRun,
-            maxDd / 10000.0)
-        }
-        val st = stOpt.get
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
-      }
-    }
-
-    perTicker(stream)(update)
+    perTicker(stream)(segments[Ticker, DrawdownState, DrawdownOut](
+        staleDays, _.lastUs) { (key, e, vl, prev, out) =>
+      val st = prev.getOrElse(DrawdownState(0L, vl, 0L, 0L))
+      val peak = math.max(st.peak4, vl)
+      val dd = peak - vl
+      val maxDd = math.max(st.maxDd4, dd)
+      val uwRun = if (dd > 0) st.uwRun + 1 else 0L
+      val frac =
+        if (peak > 0) Some(dd * 1000000L / peak) else None
+      out += DrawdownOut(key._1, key._2, e.event_id, e.ts,
+        vl / 10000.0, peak / 10000.0, dd / 10000.0, frac, uwRun,
+        maxDd / 10000.0)
+      DrawdownState(usOf(e.ts), peak, maxDd, uwRun)
+    })
   }
 
   def st33FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st33", st33Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("peak"),
-        col("drawdown"), col("dd_frac6"), col("underwater_run"),
-        col("max_drawdown"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st33", st33Transform(s, stream, staleDays))("value",
+      "peak", "drawdown", "dd_frac6", "underwater_run", "max_drawdown")
 
   def st33StreamDrawdown(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -2761,74 +2402,48 @@ object StreamingAnomaly extends Serializable {
       staleDays: Double = 8.0, minGaps: Int = 4):
       org.apache.spark.sql.Dataset[BurstOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-    val limb = BigInt(1000000000000000000L) // 1e18
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[BurstState]): Iterator[BurstOut] = {
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[BurstOut]
-        var stOpt = state.getOption
-        sorted.foreach { e =>
-          stOpt = stOpt.filter(st => usOf(e.ts) - st.lastUs <= staleUs)
-          stOpt match {
-            case None =>
-              stOpt = Some(BurstState(usOf(e.ts), 0L, 0L, 0L, 0L))
-            case Some(st) =>
-              val g = usOf(e.ts) - st.lastUs
-              val n = st.n + 1
-              val s1 = st.s1 + g
-              val s2 = BigInt(st.s2Hi) * limb + st.s2Lo +
-                BigInt(g) * BigInt(g)
-              val mean = s1 / n
-              val c = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
-              val sd =
-                if (n >= minGaps)
-                  Some(math.floor(math.sqrt(
-                    c.max(BigInt(0)).toDouble / (n * (n - 1))) +
-                    0.5).toLong)
-                else None
-              val cv = sd.flatMap(sdv =>
-                if (mean > 0)
-                  Some(math.floor(
-                    sdv.toDouble / mean * 1000000.0 + 0.5).toLong)
-                else None)
-              val burst = sd.flatMap(sdv =>
-                if (sdv + mean > 0)
-                  Some(math.floor((sdv - mean).toDouble / (sdv + mean) *
-                    1000000.0 + 0.5).toLong)
-                else None)
-              stOpt = Some(BurstState(usOf(e.ts), n, s1,
-                (s2 / limb).toLong, (s2 % limb).toLong))
-              out += BurstOut(key._1, key._2, e.event_id, e.ts, g, n,
-                mean, sd, cv, burst,
-                if (burst.exists(_ > 300000L)) 1 else 0)
-          }
-        }
-        val st = stOpt.get
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
+    perTicker(stream)(segments[Ticker, BurstState, BurstOut](staleDays,
+        _.lastUs) { (key, e, _, prev, out) =>
+      prev match {
+        case None =>
+          BurstState(usOf(e.ts), 0L, 0L, 0L, 0L)
+        case Some(st) =>
+          val g = usOf(e.ts) - st.lastUs
+          val n = st.n + 1
+          val s1 = st.s1 + g
+          val s2 = fromLimbs(st.s2Hi, st.s2Lo) + BigInt(g) * BigInt(g)
+          val mean = s1 / n
+          val c = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
+          val sd =
+            if (n >= minGaps)
+              Some(math.floor(math.sqrt(
+                c.max(BigInt(0)).toDouble / (n * (n - 1))) +
+                0.5).toLong)
+            else None
+          val cv = sd.flatMap(sdv =>
+            if (mean > 0)
+              Some(math.floor(
+                sdv.toDouble / mean * 1000000.0 + 0.5).toLong)
+            else None)
+          val burst = sd.flatMap(sdv =>
+            if (sdv + mean > 0)
+              Some(math.floor((sdv - mean).toDouble / (sdv + mean) *
+                1000000.0 + 0.5).toLong)
+            else None)
+          out += BurstOut(key._1, key._2, e.event_id, e.ts, g, n,
+            mean, sd, cv, burst,
+            if (burst.exists(_ > 300000L)) 1 else 0)
+          val (s2Hi, s2Lo) = toLimbs(s2)
+          BurstState(usOf(e.ts), n, s1, s2Hi, s2Lo)
       }
-    }
-
-    perTicker(stream)(update)
+    })
   }
 
   def st34FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st34", st34Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("gap_us"), col("n_gaps"),
-        col("mean_gap_us"), col("sd_gap_us"), col("cv6"),
-        col("burstiness6"), col("bursty_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st34", st34Transform(s, stream, staleDays))("gap_us",
+      "n_gaps", "mean_gap_us", "sd_gap_us", "cv6", "burstiness6",
+      "bursty_flag")
 
   def st34StreamBurstiness(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -2864,91 +2479,41 @@ object StreamingAnomaly extends Serializable {
       cfg: AnomalyConfig = AnomalyConfig(),
       staleDays: Double = 8.0): org.apache.spark.sql.Dataset[FlapOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[FlapState]): Iterator[FlapOut] = {
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[FlapOut]
-        var stOpt = state.getOption
-        sorted.foreach { e =>
-          stOpt = stOpt.filter(st =>
-            usOf(e.ts) - usOf(st.base.lastTs) <= staleUs)
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          stOpt match {
-            case None =>
-              stOpt = Some(FlapState(
-                TickerState(e.ts, e.value, vl, 1, Array.empty[Long]),
-                1L, 0L, 0L, 0))
-              out += FlapOut(key._1, key._2, e.event_id, e.ts, 0, 1L,
-                0L, 0L, None, 0, 0)
-            case Some(st0) =>
-              val st = st0.base
-              // st02/st30's exact chain: long diffs, one double
-              // conversion per sum, same flags
-              val dl = math.abs(vl - st.lastScaled)
-              val newRun = if (dl == 0L) st.runLength + 1 else 1
-              val n = math.min(st.diffs.length + 1, cfg.dataPeriods)
-              val ds = new Array[Long](n)
-              ds(0) = dl
-              System.arraycopy(st.diffs, 0, ds, 1, n - 1)
-              var sumdL = 0L
-              var sumsqL = 0L
-              var j = 0
-              while (j < n) {
-                val d = ds(j); sumdL += d; sumsqL += d * d; j += 1
-              }
-              val sumd = sumdL.toDouble
-              val sumsq = sumsqL.toDouble
-              val num = sumsq - sumd * sumd / n
-              val z =
-                if (n >= 2 && num > 0)
-                  math.abs(dl.toDouble - sumd / n) /
-                    math.sqrt(num / (n - 1))
-                else 0.0
-              val verdict =
-                if (z >= cfg.stddevLim || newRun >= cfg.repLim) 1 else 0
-              val flip = if (verdict != st0.lastVerdict) 1L else 0L
-              val nObs = st0.n + 1
-              val alerts = st0.nAlerts + verdict
-              val flips = st0.flips + flip
-              val rate = Some(math.floor(
-                flips.toDouble / (nObs - 1) * 1000000.0 + 0.5).toLong)
-              val flapping =
-                if (rate.exists(_ > 300000L) && flips >= 6) 1 else 0
-              stOpt = Some(FlapState(
-                TickerState(e.ts, e.value, vl, newRun, ds),
-                nObs, alerts, flips, verdict))
-              out += FlapOut(key._1, key._2, e.event_id, e.ts, verdict,
-                nObs, alerts, flips, rate, flapping,
-                if (flapping == 1 && verdict == 1) 1 else 0)
-          }
-        }
-        val st = stOpt.get
-        state.update(st)
-        state.setTimeoutTimestamp(st.base.lastTs.getTime + staleMs)
-        out.result().iterator
+    perTicker(stream)(segments[Ticker, FlapState, FlapOut](staleDays,
+        st => usOf(st.base.lastTs)) { (key, e, v4, prev, out) =>
+      prev match {
+        case None =>
+          out += FlapOut(key._1, key._2, e.event_id, e.ts, 0, 1L,
+            0L, 0L, None, 0, 0)
+          FlapState(seedBase(e, v4), 1L, 0L, 0L, 0)
+        case Some(st0) =>
+          // st02/st30's exact chain and flags
+          val nb = advance(st0.base, e, v4, cfg.dataPeriods)
+          val z = zscore(nb.diffs)
+          val verdict =
+            if (z >= cfg.stddevLim || nb.runLength >= cfg.repLim) 1 else 0
+          val flip = if (verdict != st0.lastVerdict) 1L else 0L
+          val nObs = st0.n + 1
+          val alerts = st0.nAlerts + verdict
+          val flips = st0.flips + flip
+          val rate = Some(math.floor(
+            flips.toDouble / (nObs - 1) * 1000000.0 + 0.5).toLong)
+          val flapping =
+            if (rate.exists(_ > 300000L) && flips >= 6) 1 else 0
+          out += FlapOut(key._1, key._2, e.event_id, e.ts, verdict,
+            nObs, alerts, flips, rate, flapping,
+            if (flapping == 1 && verdict == 1) 1 else 0)
+          FlapState(nb, nObs, alerts, flips, verdict)
       }
-    }
-
-    perTicker(stream)(update)
+    })
   }
 
   def st35FromStream(s: SparkSession, stream: DataFrame,
       cfg: AnomalyConfig = AnomalyConfig(),
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st35", st35Transform(s, stream, cfg, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("anomaly"), col("n_obs"),
-        col("n_alerts"), col("n_flips"), col("flip_rate6"),
-        col("flapping_flag"), col("suppressed_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st35", st35Transform(s, stream, cfg, staleDays))(
+      "anomaly", "n_obs", "n_alerts", "n_flips", "flip_rate6",
+      "flapping_flag", "suppressed_flag")
 
   /** st36 per-ticker extreme state: O(1) — last event time, count,
     * value sum, two-limb square sum, running min and max.
@@ -2982,64 +2547,36 @@ object StreamingAnomaly extends Serializable {
       staleDays: Double = 8.0, minObs: Int = 3):
       org.apache.spark.sql.Dataset[ExtremeOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-    val limb = BigInt(1000000000000000000L) // 1e18
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[ExtremeState]): Iterator[ExtremeOut] = {
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[ExtremeOut]
-        var stOpt = state.getOption
-        sorted.foreach { e =>
-          stOpt = stOpt.filter(st => usOf(e.ts) - st.lastUs <= staleUs)
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          val prev = stOpt.getOrElse(
-            ExtremeState(0L, 0L, 0L, 0L, 0L, vl, vl))
-          val n = prev.n + 1
-          val s1 = prev.s1 + vl
-          val s2 = BigInt(prev.s2Hi) * limb + prev.s2Lo +
-            BigInt(vl) * BigInt(vl)
-          val mn = math.min(prev.minY, vl)
-          val mx = math.max(prev.maxY, vl)
-          val m2 = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
-          // maxdev = max(n*max - S1, S1 - n*min), q119's integer form
-          val maxdev = (BigInt(n) * mx - BigInt(s1))
-            .max(BigInt(s1) - BigInt(n) * mn)
-          val g6 =
-            if (n >= minObs && m2 > 0)
-              Some(math.floor(maxdev.toDouble /
-                math.sqrt(m2.toDouble * n / (n - 1)) *
-                1000000.0 + 0.5).toLong)
-            else None
-          stOpt = Some(ExtremeState(usOf(e.ts), n, s1,
-            (s2 / limb).toLong, (s2 % limb).toLong, mn, mx))
-          out += ExtremeOut(key._1, key._2, e.event_id, e.ts,
-            vl / 10000.0, n, mn / 10000.0, mx / 10000.0, g6,
-            if (g6.exists(_ > 3000000L)) 1 else 0)
-        }
-        val st = stOpt.get
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
-      }
-    }
-
-    perTicker(stream)(update)
+    perTicker(stream)(segments[Ticker, ExtremeState, ExtremeOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      val st = prev.getOrElse(ExtremeState(0L, 0L, 0L, 0L, 0L, vl, vl))
+      val n = st.n + 1
+      val s1 = st.s1 + vl
+      val s2 = fromLimbs(st.s2Hi, st.s2Lo) + BigInt(vl) * BigInt(vl)
+      val mn = math.min(st.minY, vl)
+      val mx = math.max(st.maxY, vl)
+      val m2 = BigInt(n) * s2 - BigInt(s1) * BigInt(s1)
+      // maxdev = max(n*max - S1, S1 - n*min), q119's integer form
+      val maxdev = (BigInt(n) * mx - BigInt(s1))
+        .max(BigInt(s1) - BigInt(n) * mn)
+      val g6 =
+        if (n >= minObs && m2 > 0)
+          Some(math.floor(maxdev.toDouble /
+            math.sqrt(m2.toDouble * n / (n - 1)) *
+            1000000.0 + 0.5).toLong)
+        else None
+      out += ExtremeOut(key._1, key._2, e.event_id, e.ts,
+        vl / 10000.0, n, mn / 10000.0, mx / 10000.0, g6,
+        if (g6.exists(_ > 3000000L)) 1 else 0)
+      val (s2Hi, s2Lo) = toLimbs(s2)
+      ExtremeState(usOf(e.ts), n, s1, s2Hi, s2Lo, mn, mx)
+    })
   }
 
   def st36FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st36", st36Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("n_obs"),
-        col("run_min"), col("run_max"), col("g6"), col("extreme_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st36", st36Transform(s, stream, staleDays))("value",
+      "n_obs", "run_min", "run_max", "g6", "extreme_flag")
 
   def st36StreamExtremes(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -3086,63 +2623,38 @@ object StreamingAnomaly extends Serializable {
   def st37Transform(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): org.apache.spark.sql.Dataset[MaseOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[MaseState]): Iterator[MaseOut] = {
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[MaseOut]
-        var stOpt = state.getOption
-        sorted.foreach { e =>
-          stOpt = stOpt.filter(st => usOf(e.ts) - st.lastUs <= staleUs)
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          stOpt match {
-            case None =>
-              stOpt = Some(MaseState(usOf(e.ts), vl, 0L, vl, 0L, 0L, 0L))
-              out += MaseOut(key._1, key._2, e.event_id, e.ts,
-                vl / 10000.0, 0L, None, 0)
-            case Some(st) =>
-              val err = vl - (st.l + st.b)
-              val d = vl - st.prevV
-              val sae = st.sae + math.abs(err)
-              val san = st.san + math.abs(d)
-              val n = st.n + 1
-              val mase6 =
-                if (san > 0)
-                  Some(math.floor(sae.toDouble / san.toDouble *
-                    1000000.0 + 0.5).toLong)
-                else None
-              val l2 = math.floor((vl + st.l + st.b) / 2.0).toLong
-              val b2 = math.floor((l2 - st.l + 3.0 * st.b) / 4.0).toLong
-              stOpt = Some(MaseState(usOf(e.ts), l2, b2, vl, sae, san, n))
-              out += MaseOut(key._1, key._2, e.event_id, e.ts,
-                vl / 10000.0, n, mase6,
-                if (mase6.exists(_ < 1000000L)) 1 else 0)
-          }
-        }
-        val st = stOpt.get
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
+    perTicker(stream)(segments[Ticker, MaseState, MaseOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      prev match {
+        case None =>
+          out += MaseOut(key._1, key._2, e.event_id, e.ts,
+            vl / 10000.0, 0L, None, 0)
+          MaseState(usOf(e.ts), vl, 0L, vl, 0L, 0L, 0L)
+        case Some(st) =>
+          val err = vl - (st.l + st.b)
+          val d = vl - st.prevV
+          val sae = st.sae + math.abs(err)
+          val san = st.san + math.abs(d)
+          val n = st.n + 1
+          val mase6 =
+            if (san > 0)
+              Some(math.floor(sae.toDouble / san.toDouble *
+                1000000.0 + 0.5).toLong)
+            else None
+          val l2 = math.floor((vl + st.l + st.b) / 2.0).toLong
+          val b2 = math.floor((l2 - st.l + 3.0 * st.b) / 4.0).toLong
+          out += MaseOut(key._1, key._2, e.event_id, e.ts,
+            vl / 10000.0, n, mase6,
+            if (mase6.exists(_ < 1000000L)) 1 else 0)
+          MaseState(usOf(e.ts), l2, b2, vl, sae, san, n)
       }
-    }
-
-    perTicker(stream)(update)
+    })
   }
 
   def st37FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0): DataFrame =
-    collect(s, "st37", st37Transform(s, stream, staleDays))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("n_scored"),
-        col("mase6"), col("beats_naive_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st37", st37Transform(s, stream, staleDays))("value",
+      "n_scored", "mase6", "beats_naive_flag")
 
   def st37StreamMase(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -3185,60 +2697,39 @@ object StreamingAnomaly extends Serializable {
       domainMax: Double = 1000.0, staleDays: Double = 8.0)
       : org.apache.spark.sql.Dataset[PsiOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-    val dom4 = math.floor(domainMax * 10000.0 + 0.5).toLong
-    val width = math.max(1L, dom4 / buckets)
-
-    def update(key: String, events: Iterator[TickEvent],
-        state: GroupState[PsiState]): Iterator[PsiOut] = {
-      if (state.hasTimedOut) {
-        state.remove() // quiet type: next arrival starts a new segment
-        Iterator.empty
-      } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[PsiOut]
-        var stOpt = state.getOption
-        val rc = ref.getOrElse(key, new Array[Long](buckets))
-        val rTot = rc.sum
-        sorted.foreach { e =>
-          stOpt = stOpt.filter(st => usOf(e.ts) - st.lastUs <= staleUs)
-          val prev = stOpt.getOrElse(
-            PsiState(usOf(e.ts), new Array[Long](buckets), 0L))
-          val v4 = math.floor(e.value * 10000.0 + 0.5).toLong
-          val b = math.min(buckets - 1L, math.max(0L, v4 / width)).toInt
-          val counts = prev.counts.clone()
-          counts(b) += 1
-          val total = prev.total + 1
-          var psi9 = 0L
-          var j = 0
-          while (j < buckets) {
-            val p = (rc(j) + 1).toDouble / (rTot + buckets)
-            val q = (counts(j) + 1).toDouble / (total + buckets)
-            psi9 += math.floor((p - q) * math.log(p / q) * 1e9 + 0.5).toLong
-            j += 1
-          }
-          stOpt = Some(PsiState(usOf(e.ts), counts, total))
-          out += PsiOut(key, e.event_id, e.ts, v4 / 10000.0, total, psi9,
-            if (psi9 > 200000000L) 1 else 0)
-        }
-        val st = stOpt.get
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
+    val width = math.max(1L, scale4(domainMax, "domainMax") / buckets)
+    val flat = new Array[Long](buckets)
+    val refTotal = ref.map { case (t, rc) => t -> rc.sum }
+    // a quiet type's next arrival starts a new segment
+    keyed(stream)(_.event_type)(segments[String, PsiState, PsiOut](
+        staleDays, _.lastUs) { (key, e, v4, prev, out) =>
+      val rc = ref.getOrElse(key, flat)
+      val rTot = refTotal.getOrElse(key, 0L)
+      val st = prev.getOrElse(
+        PsiState(usOf(e.ts), new Array[Long](buckets), 0L))
+      val b = math.min(buckets - 1L, math.max(0L, v4 / width)).toInt
+      val counts = st.counts.clone()
+      counts(b) += 1
+      val total = st.total + 1
+      var psi9 = 0L
+      var j = 0
+      while (j < buckets) {
+        val p = (rc(j) + 1).toDouble / (rTot + buckets)
+        val q = (counts(j) + 1).toDouble / (total + buckets)
+        psi9 += math.floor((p - q) * math.log(p / q) * 1e9 + 0.5).toLong
+        j += 1
       }
-    }
-
-    keyed(stream)(_.event_type)(update)
+      out += PsiOut(key, e.event_id, e.ts, v4 / 10000.0, total, psi9,
+        if (psi9 > 200000000L) 1 else 0)
+      PsiState(usOf(e.ts), counts, total)
+    })
   }
 
   def st38FromStream(s: SparkSession, stream: DataFrame,
       ref: Map[String, Array[Long]], staleDays: Double = 8.0): DataFrame =
-    collect(s, "st38", st38Transform(s, stream, ref, staleDays = staleDays))
-      .select(col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("n_seen"),
-        col("psi9"), col("drift_flag"))
-      .orderBy(col("event_type"), col("date_recorded"), col("event_id"))
+    eventRows(s, "st38",
+      st38Transform(s, stream, ref, staleDays = staleDays),
+      Seq("event_type"))("value", "n_seen", "psi9", "drift_flag")
 
   def st38StreamPsi(s: SparkSession, dir: String,
       staleDays: Double = 8.0): DataFrame =
@@ -3272,70 +2763,47 @@ object StreamingAnomaly extends Serializable {
       staleDays: Double = 8.0, window: Int = 16,
       minWin: Int = 5): org.apache.spark.sql.Dataset[SpearOut] = {
     import s.implicits._
-    val staleUs = (staleDays * 86400e6).toLong
-    val staleMs = (staleDays * 86400e3).toLong
-
-    def update(key: (Long, String), events: Iterator[TickEvent],
-        state: GroupState[TrendState]): Iterator[SpearOut] = {
-      if (state.hasTimedOut) {
-        state.remove() // quiet ticker: ring gone, key evicted
-        Iterator.empty
+    // a new segment's ring starts empty
+    val empty = TrendState(0L, Array.empty[Long], Array.empty[Long])
+    perTicker(stream)(segments[Ticker, TrendState, SpearOut](staleDays,
+        _.lastUs) { (key, e, vl, prev, out) =>
+      val st = prev.getOrElse(empty)
+      val ts2 = (st.tus :+ usOf(e.ts)).takeRight(window)
+      val vs2 = (st.v4l :+ vl).takeRight(window)
+      val m = vs2.length
+      if (m < minWin) {
+        out += SpearOut(key._1, key._2, e.event_id, e.ts,
+          vl / 10000.0, m, None, 0)
       } else {
-        val sorted = events.toSeq.sortBy(e => (usOf(e.ts), e.event_id))
-        val out = Vector.newBuilder[SpearOut]
-        var st = state.getOption.getOrElse(
-          TrendState(0L, Array.empty[Long], Array.empty[Long]))
-        sorted.foreach { e =>
-          if (st.tus.nonEmpty && usOf(e.ts) - st.lastUs > staleUs)
-            st = TrendState(0L, Array.empty[Long], Array.empty[Long])
-          val vl = math.floor(e.value * 10000.0 + 0.5).toLong
-          val ts2 = (st.tus :+ usOf(e.ts)).takeRight(window)
-          val vs2 = (st.v4l :+ vl).takeRight(window)
-          st = TrendState(usOf(e.ts), ts2, vs2)
-          val m = vs2.length
-          if (m < minWin) {
-            out += SpearOut(key._1, key._2, e.event_id, e.ts,
-              vl / 10000.0, m, None, 0)
-          } else {
-            // ry(i) = permutation rank of (value, position); rx = i+1
-            var dd = 0L
-            var i = 0
-            while (i < m) {
-              var below = 0
-              var j = 0
-              while (j < m) {
-                if (vs2(j) < vs2(i) || (vs2(j) == vs2(i) && j < i)) below += 1
-                j += 1
-              }
-              val d = (i + 1).toLong - (below + 1).toLong
-              dd += d * d
-              i += 1
-            }
-            val bigM = m.toLong * m * m - m
-            val rho6 = math.floor((bigM - 6L * dd).toDouble / bigM.toDouble *
-              1000000.0 + 0.5).toLong
-            out += SpearOut(key._1, key._2, e.event_id, e.ts,
-              vl / 10000.0, m, Some(rho6),
-              if (math.abs(rho6) >= 800000L) 1 else 0)
+        // ry(i) = permutation rank of (value, position); rx = i+1
+        var dd = 0L
+        var i = 0
+        while (i < m) {
+          var below = 0
+          var j = 0
+          while (j < m) {
+            if (vs2(j) < vs2(i) || (vs2(j) == vs2(i) && j < i)) below += 1
+            j += 1
           }
+          val d = (i + 1).toLong - (below + 1).toLong
+          dd += d * d
+          i += 1
         }
-        state.update(st)
-        state.setTimeoutTimestamp(st.lastUs / 1000 + staleMs)
-        out.result().iterator
+        val bigM = m.toLong * m * m - m
+        val rho6 = math.floor((bigM - 6L * dd).toDouble / bigM.toDouble *
+          1000000.0 + 0.5).toLong
+        out += SpearOut(key._1, key._2, e.event_id, e.ts,
+          vl / 10000.0, m, Some(rho6),
+          if (math.abs(rho6) >= 800000L) 1 else 0)
       }
-    }
-
-    perTicker(stream)(update)
+      TrendState(usOf(e.ts), ts2, vs2)
+    })
   }
 
   def st39FromStream(s: SparkSession, stream: DataFrame,
       staleDays: Double = 8.0, window: Int = 16): DataFrame =
-    collect(s, "st39", st39Transform(s, stream, staleDays, window))
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        col("ts").as("date_recorded"), col("value"), col("n_window"),
-        col("rho6"), col("mono_flag"))
-      .orderBy(col("user_id"), col("event_type"), col("date_recorded"),
-        col("event_id"))
+    eventRows(s, "st39", st39Transform(s, stream, staleDays, window))(
+      "value", "n_window", "rho6", "mono_flag")
 
   def st39StreamSpearman(s: SparkSession, dir: String,
       staleDays: Double = 8.0, window: Int = 16): DataFrame =

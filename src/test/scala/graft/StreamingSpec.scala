@@ -57,14 +57,20 @@ class StreamingSpec extends AnyFunSuite {
     // per-detector drivers must not creep back into graft.streaming:
     // the memory sink, the checkpointed sink and the synchronous drive
     // each appear once, inside the runner, and the keyed-state prelude
-    // once, in StreamingAnomaly.keyed
+    // once, in StreamingAnomaly.keyed; likewise the segment fold's
+    // rules: the per-batch event order (StreamingAnomaly.inOrder), the
+    // 1e-4 scale and the base-1e18 limb (FixedPoint)
     val files = new java.io.File("src/main/scala/graft/streaming")
-      .listFiles().filter(_.getName.endsWith(".scala"))
+      .listFiles().filter(_.getName.endsWith(".scala")) :+
+      new java.io.File("src/main/scala/graft/FixedPoint.scala")
     val once = Seq(
       "format(\"memory\")" -> "StreamRunner.scala",
       ".option(\"checkpointLocation\"" -> "StreamRunner.scala",
       "processAllAvailable()" -> "StreamRunner.scala",
-      ".flatMapGroupsWithState(" -> "StreamingAnomaly.scala")
+      ".flatMapGroupsWithState(" -> "StreamingAnomaly.scala",
+      "(usOf(e.ts), e.event_id)" -> "StreamingAnomaly.scala",
+      "* 10000.0 + 0.5" -> "FixedPoint.scala",
+      "BigInt(1000000000000000000L)" -> "FixedPoint.scala")
     for ((pat, home) <- once) {
       val hits = files.toSeq.map { f =>
         f.getName -> java.nio.file.Files.readAllLines(f.toPath).asScala
@@ -72,6 +78,72 @@ class StreamingSpec extends AnyFunSuite {
       }.filter(_._2 > 0)
       assert(hits == Seq(home -> 1), s"$pat: $hits")
     }
+  }
+
+  private type Ev = (Long, java.sql.Timestamp, Long, String, Double)
+
+  /** `rows` (event_id, ts, user_id, event_type, value) as one
+    * micro-batch of an in-memory stream.
+    */
+  private def memEvents(rows: Seq[Ev]) = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    val ms = MemoryStream[Ev](implicitly[org.apache.spark.sql.Encoder[Ev]],
+      spark.sqlContext)
+    ms.addData(rows)
+    ms.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
+  }
+
+  private def hourTs(i: Int) =
+    new java.sql.Timestamp(1704067200000L + i * 3600000L) // 2024-01-01
+
+  test("st02 flags a x10 decimal-point spike near 35,000") {
+    // the spike's squared diff alone exceeds Long.MaxValue: a wrapping
+    // long sum of squares makes the variance negative and z = 0.0; the
+    // exact z over the 28-diff frame is 5.10
+    val prints = (0 until 29).map(i => 35000.0 + (i % 5) * 0.25)
+    val rows = (prints :+ prints.last * 10).zipWithIndex.map {
+      case (v, i) => (i.toLong, hourTs(i), 1L, "idx", v)
+    }
+    val spike = StreamingAnomaly.st02FromStream(spark, memEvents(rows),
+        operators.AnomalyConfig(dataPeriods = 28))
+      .filter(col("event_id") === 29).collect()
+    assert(spike.length == 1)
+    val z = spike(0).getAs[Double]("zscore")
+    assert(z >= 4.5 && spike(0).getAs[Int]("stddev_flag") == 1, s"z = $z")
+  }
+
+  test("st02 and st08 fail the query on a NaN or infinite value, " +
+      "naming the key and event_id") {
+    val detectors = Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)](
+      "st02" -> (StreamingAnomaly.st02FromStream(spark, _)),
+      "st08" -> (StreamingAnomaly.st08FromStream(spark, _)))
+    for ((name, run) <- detectors;
+         bad <- Seq(Double.NaN, Double.PositiveInfinity,
+           Double.NegativeInfinity)) {
+      val rows = Seq((1L, hourTs(0), 7L, "idx", 35000.0),
+        (2L, hourTs(1), 7L, "idx", bad))
+      val e = intercept[Exception](run(memEvents(rows)).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+      assert(msgs.contains(s"key (7,idx), event_id 2: value $bad is not"),
+        s"$name on $bad: $msgs")
+    }
+  }
+
+  test("event time before 1970 keeps its order and its µs gaps") {
+    // Timestamp(-1500 ms) is 1969-12-31 23:59:58.5: whole seconds are
+    // the floor of getTime / 1000, not its truncation
+    assert(FixedPoint.usOf(new java.sql.Timestamp(-1500L)) == -1500000L)
+    assert(FixedPoint.usOf(new java.sql.Timestamp(-1000L)) == -1000000L)
+    val rows = Seq((1L, new java.sql.Timestamp(-1500L), 1L, "idx", 1.0),
+      (2L, new java.sql.Timestamp(-1000L), 1L, "idx", 2.0))
+    val gaps = StreamingAnomaly.st18FromStream(spark, memEvents(rows))
+      .collect().map(r => (r.getAs[Long]("event_id"),
+        Option(r.getAs[java.lang.Long]("gap_us")).map(_.longValue)))
+    assert(gaps.toSeq == Seq((1L, None), (2L, Some(500000L))),
+      gaps.mkString(", "))
   }
 
   test("st01 windowed agg totals match the batch count") {
