@@ -130,8 +130,8 @@ object Bench {
     // staging/warm-up (and, in a full pass, each predecessor query)
     // leaves a dirty old gen, and whichever timed run next allocates
     // heavily pays the full collection. Two fixes, both measurement
-    // hygiene (the plans never changed): settle() — BenchScale's
-    // double-GC-plus-pause — before EVERY timed sample so each entry
+    // hygiene (the plans never changed): settle() — a double GC plus
+    // pause — before EVERY timed sample so each entry
     // starts from a clean heap, and per-entry GC-time deltas published
     // in the artifact ("gc_sec") so any residual inflation is
     // attributed to collection, not to the plan.
@@ -157,10 +157,6 @@ object Bench {
       r
     }
     val only = args.toSet // optional subset for local iteration
-    // test hook proving the error path end-to-end: name a query here
-    // and it throws instead of running, which must surface in the
-    // "errors" JSON field and a nonzero exit — never as a fast timing
-    val breakKey = sys.env.get("SPARK_GRAFT_BENCH_BREAK")
     // Resample merge. A second sample exists only for measurement (the
     // streaming best-of-2, the end-of-suite slow-tail retime) — the
     // query already ran successfully once, so a flaky resample must
@@ -178,12 +174,7 @@ object Bench {
     }
     val firstPass = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (name, fn0) =>
-        val fn: (org.apache.spark.sql.SparkSession, String) =>
-            org.apache.spark.sql.DataFrame =
-          if (breakKey.contains(name))
-            (_, _) => sys.error("injected bench fault")
-          else fn0
+      .map { case (name, fn) =>
         // progress marker on STDERR only (the stdout contract stays one
         // JSON line): lets a profiler (jstack / PrintCompilation) be
         // correlated with the query that was running — round-17 q108
@@ -206,10 +197,10 @@ object Bench {
     // Second, settled pass for the slow tail: any entry over 4 s gets
     // one more sample at the END of the suite (heap long since swept)
     // and the published number is the min — the honest estimator for
-    // strictly-additive noise (BenchScale's argument). The first-pass
-    // value is kept in "retimed_first_sec" so the artifact documents
-    // the inflation rather than hiding it. Cap 12 entries, slowest
-    // first, to bound added wall-clock.
+    // strictly-additive noise. The first-pass value is kept in
+    // "retimed_first_sec" so the artifact documents the inflation
+    // rather than hiding it. Cap 12 entries, slowest first, to bound
+    // added wall-clock.
     val retime = firstPass
       .collect { case (n, fn, Right((sec, _))) if sec > 4.0 => (n, fn, sec) }
       .sortBy(-_._3).take(12)
@@ -235,43 +226,11 @@ object Bench {
     val es = errs.map { case (k, e) => s"\"" + k + "\":\"" + e + "\"" }
       .mkString("{", ",", "}")
     val total = ok.map(_._2._1).sum
-    // recall@k of the ANN scale tier vs s01 exact — the one number a
-    // 10⁹-vector user asks first, published per round instead of
-    // living only inside the spec suite
     val recall: String = try {
-      def topk(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-        df.collect()
-          .map(r => r.getAs[Long]("query_id") -> r.getAs[Long]("vec_id"))
-          .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
-      val exact = topk(graft.similarity.Ann.bruteForceTopK(spark, sfDir))
-      def rec(df: org.apache.spark.sql.DataFrame): Double = {
-        val approx = topk(df)
-        val fracs = exact.map { case (q, t) =>
-          approx.getOrElse(q, Set.empty).intersect(t).size.toDouble / t.size
-        }
-        // empty exact set (e.g. empty embeddings table) => 0.0, not
-        // NaN — NaN would make the emitted line invalid JSON
-        if (fracs.isEmpty) 0.0
-        else math.floor(fracs.sum / fracs.size * 10000.0 + 0.5) / 10000.0
-      }
-      val r02 = rec(graft.similarity.Ann.lshTopK(spark, sfDir))
-      val r03 = rec(graft.similarity.Ann.ivfTopK(spark, sfDir))
-      val r05 = rec(graft.similarity.Ann.pqTopK(spark, sfDir))
-      val r13 = rec(graft.similarity.Ann.ivfPqTopK(spark, sfDir))
-      s"""{"s02_ann_lsh":$r02,"s03_ann_ivf":$r03,"s05_ann_pq":$r05,""" +
-        s""""s13_ann_ivfpq":$r13,"k":5}"""
+      annRecall(spark, sfDir).map { case (k, r) => s""""$k":$r""" }
+        .mkString("{", ",", s""","k":$RecallK}""")
     } catch { case e: Throwable => s"""{"error":"${e.getClass.getName}"}""" }
     finally sweep() // cache sweep must run even when a recall call throws
-    // Current-round note only — the multi-round forensic record moved
-    // to BENCH_NOTES.md (round-15 verdict item 3: the artifact
-    // generator carries data, not history).
-    val notes =
-      """{"r16_pair_guard_hoisted":"the r15 exact-long guard left """ +
-        """PairSeries.intersect's merge loop: per-ticker max(abs(y)) """ +
-        """is precomputed in the PairPlan collapse and each pair """ +
-        """pays one O(1) multiplyHigh bound check before the merge """ +
-        """- no per-element branch, no BigInt; isolated A/B and """ +
-        """history in BENCH_NOTES.md"}"""
     val res = resampleErrs.map { case (k, e) =>
       s"\"" + k + "\":\"" + e + "\"" }.mkString("{", ",", "}")
     // "estimator" marks the timing methodology so round-over-round
@@ -283,39 +242,45 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec",""" +
         s""""estimator":"min-settled-v2","queries":$qs,""" +
         s""""gc_sec":$gcs,"retimed_first_sec":$rts,""" +
-        s""""resample_errors":$res,"notes":$notes,""" +
+        s""""resample_errors":$res,"notes":{},""" +
         s""""errors":$es,"ann_recall":$recall,"sf":"$sfDir"}"""
     println(line)
     val out = new java.io.PrintWriter("bench_out.json")
     try out.println(line) finally out.close()
-    // Round-stamped full artifact (round-15 verdict item 2): the
-    // driver's BENCH_r{N}.json has twice shipped as a clipped stdout
-    // tail; bench_out.json is gitignored, so also write the line to a
-    // TRACKED BENCH_r{N}_full.json — N inferred as 1 + the highest
-    // BENCH_r*.json already present (the prior round's committed
-    // artifact) — and the end-of-round commit preserves the record.
-    // FULL-suite runs only: a subset run (args given) is a local
-    // iteration probe, and letting it overwrite the round artifact
-    // destroys the full record it exists to preserve (it did, once).
-    if (only.isEmpty) try {
-      // Round inference (round-16 verdict item 3): the old max over
-      // BENCH_r*.json alone misnumbered the driver's SECOND run in a
-      // round (its first run writes BENCH_r{N}_full.json, the second
-      // still saw max = N-1 and collided on the same name). Take the
-      // max over EVERY BENCH_r<digits>... artifact — .json, _full.json,
-      // _c8.json alike — and allow an explicit SPARK_GRAFT_ROUND pin.
-      val pat = "BENCH_r(\\d+)[._].*".r
-      val prev = Option(new java.io.File(".").listFiles()).toSeq.flatten
-        .flatMap(f => f.getName match {
-          case pat(n) => Some(n.toInt)
-          case _      => None
-        })
-      val round = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt)
-        .getOrElse((if (prev.isEmpty) 0 else prev.max) + 1)
-      val full = new java.io.PrintWriter(s"BENCH_r${round}_full.json")
-      try full.println(line) finally full.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
     spark.stop()
     if (errs.nonEmpty) sys.exit(2) // a failing query fails the bench
+  }
+
+  private val RecallK = 5
+
+  /** recall@k of the ANN tier (s02 LSH, s03 IVF, s05 PQ, s13 IVF-PQ)
+    * against s01's exact top-k at the registry's default parameters:
+    * per query the share of the exact set the index returns, averaged
+    * over queries and rounded to 4 decimals. No exact rows (an empty
+    * or missing embeddings table) throws, where a 0.0 would read as an
+    * index that finds nothing.
+    */
+  def annRecall(spark: org.apache.spark.sql.SparkSession, dir: String)
+      : Seq[(String, Double)] = {
+    import graft.similarity.Ann
+    def topk(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
+      df.collect()
+        .map(r => r.getAs[Long]("query_id") -> r.getAs[Long]("vec_id"))
+        .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
+    val exact = topk(Ann.bruteForceTopK(spark, dir, k = RecallK))
+    require(exact.nonEmpty,
+      s"no exact top-k rows: is $dir/embeddings.parquet present and non-empty?")
+    def rec(df: org.apache.spark.sql.DataFrame): Double = {
+      val approx = topk(df)
+      val fracs = exact.map { case (q, t) =>
+        approx.getOrElse(q, Set.empty).intersect(t).size.toDouble / t.size
+      }
+      math.floor(fracs.sum / fracs.size * 10000.0 + 0.5) / 10000.0
+    }
+    Seq(
+      "s02_ann_lsh" -> rec(Ann.lshTopK(spark, dir, k = RecallK)),
+      "s03_ann_ivf" -> rec(Ann.ivfTopK(spark, dir, k = RecallK)),
+      "s05_ann_pq" -> rec(Ann.pqTopK(spark, dir, k = RecallK)),
+      "s13_ann_ivfpq" -> rec(Ann.ivfPqTopK(spark, dir, k = RecallK)))
   }
 }

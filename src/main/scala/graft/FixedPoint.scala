@@ -18,6 +18,24 @@ private[graft] object FixedPoint {
   def usOf(t: java.sql.Timestamp): Long =
     Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
 
+  /** Start µs of the `widthUs`-wide window holding event `eventId`
+    * at `t`: the key of the windowed stream detectors, which close a
+    * window by an event-time timeout at its end. Event time before
+    * 1970 throws, naming the event: truncating division would put it in
+    * the 1970-01-01 window, and a window ending at or before the epoch
+    * can never time out (Spark requires a positive timeout timestamp).
+    * The check runs in the grouping key because Spark's first-batch
+    * watermark (0) drops such an event as late before `update` sees it.
+    */
+  def windowStartUs(t: java.sql.Timestamp, widthUs: Long,
+      eventId: Long): Long = {
+    val us = usOf(t)
+    if (us < 0L)
+      throw new IllegalArgumentException(s"event_id $eventId: event time " +
+        s"$t is before 1970-01-01; windowed detectors need ts >= 0")
+    (us / widthUs) * widthUs
+  }
+
   /** 2^53: the first magnitude at which a double stops holding every
     * integer, so the 1e-4 grid is exact only below it.
     */

@@ -11,6 +11,14 @@ import org.apache.spark.sql.functions._
   * value_rep_lim, update_lim — sized to this dataset's ~13 rows per
   * ticker. `evalTs` replaces the reference's `current_date` so results
   * are reproducible.
+  *
+  * The stddev flag needs a long enough window to fire at all: the
+  * z-score of one value among n is at most (n−1)/√n (Samuelson's
+  * bound), so `stddevLim` = 4.5 is reachable only with `dataPeriods` ≥
+  * 23. With the defaults z is at most 9/√10 ≈ 2.85 and the 4.5σ flag
+  * never fires, neither in the batch chain (q09/q10 and `AnomalyOracle`
+  * use 10) nor in st02/st30 called with `AnomalyConfig()`. The registered
+  * st02/st30 entries pass the reference's 28.
   */
 case class AnomalyConfig(
     dataPeriods: Int = 10,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.FixedPoint.{fromLimbs, scale4, toLimbs, usOf}
+import graft.FixedPoint.{fromLimbs, scale4, toLimbs, usOf, windowStartUs}
 import graft.operators.AnomalyConfig
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
@@ -415,6 +415,11 @@ object StreamingAnomaly extends Serializable {
     * in-data gaps produce identical output — exactly one staleness row
     * per closed segment, plus one for final segments the watermark
     * outlives.
+    *
+    * The z-score is over the last `cfg.dataPeriods` diffs, so with the
+    * default `AnomalyConfig()` (10 diffs) it is at most 9/√10 ≈ 2.85
+    * (Samuelson's bound) and the default 4.5σ stddev flag never fires;
+    * it needs `dataPeriods` ≥ 23 (the registered st02 passes 28).
     *
     * Values are rounded to 4 decimals and held as scaled longs; the
     * rolling mean/variance come from EXACT integer sums converted to
@@ -896,7 +901,7 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    keyed(stream)(e => (usOf(e.ts) / winUs) * winUs)(update)
+    keyed(stream)(e => windowStartUs(e.ts, winUs, e.event_id))(update)
   }
 
   /** st11 histogram state: 64 fixed long counters + total/min/max —
@@ -983,7 +988,8 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    keyed(stream)(e => (e.event_type, (usOf(e.ts) / winUs) * winUs))(update)
+    keyed(stream)(
+      e => (e.event_type, windowStartUs(e.ts, winUs, e.event_id)))(update)
   }
 
   def st11FromStream(s: SparkSession, stream: DataFrame,
@@ -1093,7 +1099,8 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    keyed(stream)(e => (e.event_type, (usOf(e.ts) / winUs) * winUs))(update)
+    keyed(stream)(
+      e => (e.event_type, windowStartUs(e.ts, winUs, e.event_id)))(update)
   }
 
   def st13FromStream(s: SparkSession, stream: DataFrame,
@@ -1185,7 +1192,8 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    keyed(stream)(e => (e.event_type, (usOf(e.ts) / winUs) * winUs))(update)
+    keyed(stream)(
+      e => (e.event_type, windowStartUs(e.ts, winUs, e.event_id)))(update)
   }
 
   def st16FromStream(s: SparkSession, stream: DataFrame): DataFrame =
@@ -1254,8 +1262,9 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    keyed(stream)(
-      e => (e.user_id, e.event_type, (usOf(e.ts) / dayUs) * dayUs))(update)
+    keyed(stream)(e =>
+      (e.user_id, e.event_type, windowStartUs(e.ts, dayUs, e.event_id)))(
+      update)
   }
 
   def st23FromStream(s: SparkSession, stream: DataFrame): DataFrame =
@@ -1734,8 +1743,9 @@ object StreamingAnomaly extends Serializable {
       }
     }
 
-    keyed(stream)(
-      e => (e.user_id, e.event_type, (usOf(e.ts) / dayUs) * dayUs))(update)
+    keyed(stream)(e =>
+      (e.user_id, e.event_type, windowStartUs(e.ts, dayUs, e.event_id)))(
+      update)
   }
 
   def st26FromStream(s: SparkSession, stream: DataFrame): DataFrame =

@@ -1,10 +1,9 @@
 package graft
 
-/** Writes `.explain("formatted")` for named queries to files — the
-  * evidence artifacts the optimization rounds commit under
-  * `plans/r{N}/`. Usage:
+/** Writes `.explain("formatted")` for named queries to files, to diff
+  * a query's physical plan before and after a change. Usage:
   *
-  *   sbt "Test/runMain graft.PlanDump plans/r17 _before q108_cross_correlation q111_granger"
+  *   sbt "Test/runMain graft.PlanDump target/plans _before q108_cross_correlation q111_granger"
   *
   * args: <outDir> <suffix> <query names...> (empty names = all).
   * Data dir from SPARK_GRAFT_SF_DIR (default sf0.001 — plans are

@@ -59,7 +59,7 @@ class StreamingSpec extends AnyFunSuite {
     // each appear once, inside the runner, and the keyed-state prelude
     // once, in StreamingAnomaly.keyed; likewise the segment fold's
     // rules: the per-batch event order (StreamingAnomaly.inOrder), the
-    // 1e-4 scale and the base-1e18 limb (FixedPoint)
+    // 1e-4 scale, the base-1e18 limb and the window start (FixedPoint)
     val files = new java.io.File("src/main/scala/graft/streaming")
       .listFiles().filter(_.getName.endsWith(".scala")) :+
       new java.io.File("src/main/scala/graft/FixedPoint.scala")
@@ -70,7 +70,8 @@ class StreamingSpec extends AnyFunSuite {
       ".flatMapGroupsWithState(" -> "StreamingAnomaly.scala",
       "(usOf(e.ts), e.event_id)" -> "StreamingAnomaly.scala",
       "* 10000.0 + 0.5" -> "FixedPoint.scala",
-      "BigInt(1000000000000000000L)" -> "FixedPoint.scala")
+      "BigInt(1000000000000000000L)" -> "FixedPoint.scala",
+      "/ widthUs) * widthUs" -> "FixedPoint.scala")
     for ((pat, home) <- once) {
       val hits = files.toSeq.map { f =>
         f.getName -> java.nio.file.Files.readAllLines(f.toPath).asScala
@@ -144,6 +145,22 @@ class StreamingSpec extends AnyFunSuite {
         Option(r.getAs[java.lang.Long]("gap_us")).map(_.longValue)))
     assert(gaps.toSeq == Seq((1L, None), (2L, Some(500000L))),
       gaps.mkString(", "))
+  }
+
+  test("st23 fails the query on an event before 1970, naming the event") {
+    // the -1 s print has no window a timeout can close: its floored
+    // window ends at the epoch and Spark requires a positive timeout.
+    // A truncating key put it in the 1970-01-01 bar, and the print
+    // vanished from the output without an error
+    val early = new java.sql.Timestamp(-1000L)
+    val rows = Seq((1L, early, 1L, "idx", 1.0),
+      (2L, new java.sql.Timestamp(2L * 86400000L), 1L, "idx", 2.0))
+    val e = intercept[Exception](
+      StreamingAnomaly.st23FromStream(spark, memEvents(rows)).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(msgs.contains(s"event_id 1: event time $early is before 1970"),
+      msgs)
   }
 
   test("st01 windowed agg totals match the batch count") {
