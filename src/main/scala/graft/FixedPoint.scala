@@ -18,23 +18,32 @@ private[graft] object FixedPoint {
   def usOf(t: java.sql.Timestamp): Long =
     Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
 
-  /** Start µs of the `widthUs`-wide window holding event `eventId`
-    * at `t`: the key of the windowed stream detectors, which close a
-    * window by an event-time timeout at its end. Event time before
-    * 1970 throws, naming the event: truncating division would put it in
-    * the 1970-01-01 window, and a window ending at or before the epoch
-    * can never time out (Spark requires a positive timeout timestamp).
-    * The check runs in the grouping key because Spark's first-batch
-    * watermark (0) drops such an event as late before `update` sees it.
+  /** Epoch µs of event `eventId` at `t`, failing on event time before
+    * 1970 and naming the event. A stream detector on an event-time
+    * timeout needs ts >= 0: Spark's first-batch watermark is 0, so it
+    * drops such an event as late before the detector's `update` sees
+    * it, and a window ending at or before the epoch can never time out
+    * (Spark requires a positive timeout timestamp). The check therefore
+    * runs in the grouping key, which sees every event before that
+    * filter (`StreamingAnomaly.keyed`).
     */
-  def windowStartUs(t: java.sql.Timestamp, widthUs: Long,
-      eventId: Long): Long = {
+  def eventUs(t: java.sql.Timestamp, eventId: Long): Long = {
     val us = usOf(t)
     if (us < 0L)
       throw new IllegalArgumentException(s"event_id $eventId: event time " +
-        s"$t is before 1970-01-01; windowed detectors need ts >= 0")
-    (us / widthUs) * widthUs
+        s"$t is before 1970-01-01; event-time stream detectors need ts >= 0")
+    us
   }
+
+  /** Start µs of the `widthUs`-wide window holding event `eventId`
+    * at `t`: the key of the windowed stream detectors, which close a
+    * window by an event-time timeout at its end. Event time before
+    * 1970 throws ([[eventUs]]): truncating division would put it in
+    * the 1970-01-01 window.
+    */
+  def windowStartUs(t: java.sql.Timestamp, widthUs: Long,
+      eventId: Long): Long =
+    (eventUs(t, eventId) / widthUs) * widthUs
 
   /** 2^53: the first magnitude at which a double stops holding every
     * integer, so the 1e-4 grid is exact only below it.
@@ -77,4 +86,17 @@ private[graft] object FixedPoint {
       throw new ArithmeticException(s"$s exceeds two base-1e18 limbs")
     (hi.toLong, lo.toLong)
   }
+
+  /** Long `i` of a window of longs held in state as one byte array,
+    * 8 big-endian bytes each. A binary state field decodes without
+    * `MapObjects`, whose lambda variable is renamed on every
+    * micro-batch's re-plan, so its decoder compiles once per JVM where
+    * an `Array[Long]` field's recompiles on every batch.
+    */
+  def longAt(bytes: Array[Byte], i: Int): Long =
+    java.nio.ByteBuffer.wrap(bytes).getLong(i * 8)
+
+  /** [[longAt]]'s inverse: writes `v` as long `i` of `bytes`. */
+  def putLong(bytes: Array[Byte], i: Int, v: Long): Unit =
+    java.nio.ByteBuffer.wrap(bytes).putLong(i * 8, v)
 }

@@ -26,8 +26,9 @@ import org.apache.spark.sql.SparkSession
   * read `spark.sql.streaming.checkpointFileManagerClass` from the
   * session that runs it, so only the builder reaches every entry
   * point. [[graft.streaming.GraftCheckpointFileManager]] writes `file:`
-  * checkpoints without Hadoop's `readlink` process per rename (most of
-  * a `ticker_stream` micro-batch on a JVM without `libhadoop`) and
+  * checkpoints without the processes Hadoop starts on a JVM without
+  * `libhadoop` (a `readlink` per side of every rename, a `chmod` per
+  * created file: together most of a `ticker_stream` micro-batch) and
   * leaves every other scheme to Spark's own choice.
   */
 object GraftSession {

@@ -360,10 +360,11 @@ object Ann {
     * then ONE IEEE division by the count — bit-stable across
     * partition orders AND replayable in the SQL oracle (both engines
     * round double→DECIMAL(38,12) to nearest, and binary doubles
-    * never tie on the decimal grid). Shared by s03 (IVF lists) and
-    * d14 (SemDeDup clusters).
+    * never tie on the decimal grid). Shared by s03 (IVF lists),
+    * s13 (IVF-PQ coarse cells) and d14 (SemDeDup clusters). An empty
+    * table fails at the seed collect ([[requireVectors]]).
     */
-  private def trainCentroids(s: SparkSession, v: DataFrame,
+  private def trainCentroids(v: DataFrame,
       nCentroids: Int, iters: Int): Array[(Int, Array[Double])] = {
     var cents: Array[(Int, Array[Double])] = v
       .orderBy(seedRank("km"), col("vec_id"))
@@ -371,6 +372,7 @@ object Ann {
       .collect()
       .zipWithIndex
       .map { case (r, i) => (i, r.getSeq[Double](1).toArray) }
+    requireVectors(v, cents.isEmpty && nCentroids > 0, "k-means")
     for (_ <- 1 to iters) {
       val recomputed = v
         .withColumn("cid", assignLocal(cents))
@@ -390,6 +392,21 @@ object Ann {
     cents
   }
 
+  /** Fails a training run whose seed collect came back empty although
+    * it asked for seeds: the embeddings table has no rows, and no
+    * codebook or centroid bank can be trained from it (a pq lookup
+    * used to throw a bare "key not found: 0" further on). LSH's
+    * hyperplanes need no training, so s02 returns an empty top-k.
+    * Releases the caller's cached training frame first.
+    */
+  private def requireVectors(cached: DataFrame, empty: Boolean,
+      training: String): Unit =
+    if (empty) {
+      cached.unpersist()
+      throw new IllegalArgumentException("the embeddings table is empty: " +
+        s"$training training needs at least one vector")
+    }
+
   def ivfTopK(s: SparkSession, dir: String,
       nQueries: Int = 10, k: Int = 5, nCentroids: Int = 16,
       nProbe: Int = 8, iters: Int = 2): DataFrame = {
@@ -402,7 +419,7 @@ object Ann {
 
     def centroidDfL(cents: Array[(Int, Array[Double])]) = centroidDf(s, cents)
 
-    val cents = trainCentroids(s, v, nCentroids, iters)
+    val cents = trainCentroids(v, nCentroids, iters)
 
     // The cache existed for the Lloyd rounds (each materialized it via
     // collect); the final query below re-derives v from the parquet
@@ -496,6 +513,7 @@ object Ann {
       .select(col("m_idx"), (col("rn") - 1).as("code"), col("sv"))
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+    requireVectors(svs, cb.isEmpty && codes > 0, "PQ codebook")
 
     for (_ <- 1 to iters) {
       // nearest codeword per (vec_id, m_idx) computed ROW-LOCALLY over
@@ -660,7 +678,7 @@ object Ann {
         transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("norm2", dot(col("v"), col("v")))
       .cache()
-    val cents = trainCentroids(s, v, nCentroids, iters)
+    val cents = trainCentroids(v, nCentroids, iters)
     // residuals: cid row-locally (argminOver), v − c(cid) by one
     // zip_with against the cid-selected literal centroid — st40's
     // admission shape; the assignment join and its exchange are gone
@@ -872,7 +890,7 @@ object Ann {
         transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("norm2", dot(col("v"), col("v")))
       .cache()
-    val cents = trainCentroids(s, v, nCentroids, iters)
+    val cents = trainCentroids(v, nCentroids, iters)
     // three consumers (both pair sides + the final select) — checkpoint
     // the assignment once or each replays the assign subtree over a
     // re-read corpus (the §8 shared-table discipline; at 100 TB this

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.FixedPoint.{fromLimbs, scale4, toLimbs, usOf, windowStartUs}
+import graft.FixedPoint.{eventUs, fromLimbs, longAt, putLong, scale4,
+  toLimbs, usOf, windowStartUs}
 import graft.operators.AnomalyConfig
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
@@ -217,7 +218,11 @@ object StreamingAnomaly extends Serializable {
 
   /** The stateful prelude of every event detector: the event columns,
     * the 1 h watermark, events grouped by `key` and folded through
-    * `update` in Append mode.
+    * `update` in Append mode. On an event-time timeout Spark drops each
+    * input row at or below the watermark before `update` runs, and the
+    * first batch's watermark is 0, so an event before 1970 would vanish
+    * without a trace: the grouping key, which sees every row first,
+    * fails the query on one instead ([[FixedPoint.eventUs]]).
     */
   private[streaming] def keyed[K: Encoder, S: Encoder, U: Encoder](
       stream: DataFrame,
@@ -232,7 +237,9 @@ object StreamingAnomaly extends Serializable {
         col("value"))
       .withWatermark("ts", "1 hour")
       .as[TickEvent]
-      .groupByKey(key)
+      .groupByKey(
+        if (timeout != GroupStateTimeout.EventTimeTimeout) key
+        else { e => eventUs(e.ts, e.event_id); key(e) })
       .flatMapGroupsWithState(OutputMode.Append, timeout)(update)
   }
 
@@ -330,14 +337,19 @@ object StreamingAnomaly extends Serializable {
         (col("ts").as("date_recorded") +: cols.map(col))): _*)
       .orderBy((key ++ Seq("date_recorded", "event_id")).map(col): _*)
 
-  /** diffs is Array[Long], not List: the state encoder's primitive
-    * fast path (UnsafeArrayData.fromPrimitiveArray) serializes it as
-    * one memcpy per key per batch, where a List walks 28 boxed cons
-    * cells — the encoder runs once per live key every micro-batch, so
-    * at millions of keys the difference is a real state-commit cost.
+  /** st02's per-ticker baseline, shared by st30 and st35. `diffs` is
+    * the window of |diffs| between consecutive prints on the 1e-4
+    * grid, newest first, as longs packed 8 bytes each
+    * ([[FixedPoint.longAt]]). A binary field, not an `Array[Long]`:
+    * Spark decodes an array field through `MapObjects`, whose lambda
+    * variable gets a fresh id in every micro-batch's re-planned state
+    * decoder, so the generated classes that build this state missed
+    * the JVM-wide codegen cache and recompiled on every batch. A
+    * binary field's decoder compiles once, and it serializes as one
+    * copy, as the primitive array did.
     */
   case class TickerState(lastTs: java.sql.Timestamp, lastValue: Double,
-      lastScaled: Long, runLength: Int, diffs: Array[Long])
+      lastScaled: Long, runLength: Int, diffs: Array[Byte])
 
   case class Flagged(user_id: Long, event_type: String, event_id: Long,
       ts: java.sql.Timestamp, value: Double, zscore: Double,
@@ -346,7 +358,7 @@ object StreamingAnomaly extends Serializable {
 
   /** st02's baseline at a segment's first print. */
   private def seedBase(e: TickEvent, v4: Long): TickerState =
-    TickerState(e.ts, e.value, v4, 1, Array.empty[Long])
+    TickerState(e.ts, e.value, v4, 1, Array.emptyByteArray)
 
   /** st02's baseline after one more print: its |diff| to the last
     * print joins the front of the `periods`-deep diff window, and a
@@ -356,15 +368,16 @@ object StreamingAnomaly extends Serializable {
   private def advance(st: TickerState, e: TickEvent, v4: Long,
       periods: Int): TickerState = {
     val dl = math.abs(v4 - st.lastScaled)
-    val n = math.min(st.diffs.length + 1, periods)
-    val ds = new Array[Long](n)
-    ds(0) = dl
-    System.arraycopy(st.diffs, 0, ds, 1, n - 1)
+    val n = math.min(st.diffs.length / 8 + 1, periods)
+    val ds = new Array[Byte](n * 8)
+    putLong(ds, 0, dl)
+    System.arraycopy(st.diffs, 0, ds, 8, (n - 1) * 8)
     TickerState(e.ts, e.value, v4, if (dl == 0L) st.runLength + 1 else 1,
       ds)
   }
 
-  /** The z-score of the newest diff, `diffs(0)`, against the window.
+  /** The z-score of the newest diff, long 0 of `diffs`, against the
+    * window.
     * Σd and Σd² are exact integers converted to double ONCE each (the
     * §8 fixed-point discipline the oracle mirrors): Σd in a long, Σd²
     * as an unsigned 128-bit (hi, lo) pair, because one ×10 decimal-
@@ -373,15 +386,15 @@ object StreamingAnomaly extends Serializable {
     * `Long.toDouble`; a wider one through BigInteger, also correctly
     * rounded.
     */
-  private def zscore(diffs: Array[Long]): Double = {
-    val n = diffs.length
+  private def zscore(diffs: Array[Byte]): Double = {
+    val n = diffs.length / 8
     var sumdL = 0L
     var hi = 0L
     var lo = 0L
     var j = 0
     while (j < n) {
       // d >= 0, so the signed high word of d·d is the unsigned one
-      val d = diffs(j)
+      val d = longAt(diffs, j)
       sumdL = Math.addExact(sumdL, d)
       val lo2 = lo + d * d
       hi += Math.multiplyHigh(d, d) +
@@ -396,7 +409,7 @@ object StreamingAnomaly extends Serializable {
         BigInt(java.lang.Long.toUnsignedString(lo))).toDouble
     val num = sumsq - sumd * sumd / n
     if (n >= 2 && num > 0)
-      math.abs(diffs(0).toDouble - sumd / n) / math.sqrt(num / (n - 1))
+      math.abs(longAt(diffs, 0).toDouble - sumd / n) / math.sqrt(num / (n - 1))
     else 0.0
   }
 
@@ -443,20 +456,24 @@ object StreamingAnomaly extends Serializable {
     * Cost profile (sf0.1, local[32], warm session): st02 runs within
     * ~0.3 s of st08 — whose state is O(1) per key — so the time is the
     * streaming harness floor, not the 28-period frame or the timeout
-    * registration. Most of that floor was checkpoint-file I/O: with
-    * Spark's default `FileContext` manager, Hadoop's local file system
-    * (no `libhadoop`) started a `readlink` process for each side of
-    * every checkpoint rename, state delta files and the offset and
-    * commit logs alike, and state commit took 0.7–0.8 s summed over
-    * the partitions of a `ticker_stream` batch (under 0.06 s now).
-    * [[GraftCheckpointFileManager]] renames local files without those
-    * processes. What is left is query start/stop, the per-batch group
-    * sort, a `chmod` process per created checkpoint file (Hadoop's
-    * `setPermission`, now the largest wait of a batch) and the state
-    * encoder's per-batch `SafeProjection` recompiles; the 4 s
-    * "intrinsic" reading in round 5 was cold-JVM streaming JIT that the
-    * bench session hygiene now absorbs in warm-up. The staleness
-    * semantics themselves add only the extra emitted rows.
+    * registration. Most of that floor was fixed work per micro-batch:
+    *  - checkpoint-file processes: Hadoop's local file system (no
+    *    `libhadoop`) started a `readlink` for each side of every
+    *    checkpoint rename and a `chmod` for every created checkpoint
+    *    file (36 a `ticker_stream` batch), state delta files and the
+    *    offset and commit logs alike. [[GraftCheckpointFileManager]]
+    *    starts neither;
+    *  - state decoder recompiles: each batch re-plans the query, and
+    *    while `diffs` was an `Array[Long]` the classes decoding
+    *    [[TickerState]] missed the codegen cache and recompiled (2 per
+    *    data batch, 48–82 ms each). With the binary field the one
+    *    compile left per batch is the watermark filter, whose literal
+    *    changes every batch.
+    * What is left is query start/stop, the per-batch group sort and
+    * that filter's compile; the 4 s "intrinsic" reading in round 5 was
+    * cold-JVM streaming JIT that the bench session hygiene now absorbs
+    * in warm-up. The staleness semantics themselves add only the extra
+    * emitted rows.
     */
   def st02StatefulFlags(s: SparkSession, dir: String,
       cfg: AnomalyConfig = AnomalyConfig(),
@@ -508,12 +525,13 @@ object StreamingAnomaly extends Serializable {
     * checkpoint location. The custom-state encodings are NOT
     * checkpoint-compatible across format changes (v2: TickerState.diffs
     * List→Array[Long]; CusumState/HoltState s2 BigDecimal→two long
-    * limbs) — a resume against an old-format checkpoint fails on state
+    * limbs; v3: TickerState.diffs Array[Long]→packed binary) — a
+    * resume against an old-format checkpoint fails on state
     * deserialization, not gracefully. Namespacing by version means an
     * upgraded job starts a fresh checkpoint instead of crashing on
     * restore; old-version directories are dead data to clean up.
     */
-  val StateFormatVersion = 2
+  val StateFormatVersion = 3
   def versionedCheckpoint(checkpoint: String): String =
     s"$checkpoint/state-format-v$StateFormatVersion"
 

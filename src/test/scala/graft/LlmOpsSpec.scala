@@ -211,6 +211,32 @@ class LlmOpsSpec extends AnyFunSuite {
     }
   }
 
+  /** An embeddings table with the real schema and no rows. */
+  private lazy val emptyEmbDir: String = {
+    val tmp = java.nio.file.Files.createTempDirectory("emptyemb").toString
+    Tables.embeddings(spark, dir).limit(0)
+      .write.parquet(s"$tmp/embeddings.parquet")
+    tmp
+  }
+
+  // each builder that trains on the table names the empty table, where
+  // a bare "key not found: 0" or an empty top-k used to come out
+  Seq[(String, String => org.apache.spark.sql.DataFrame)](
+    "ivfTopK" -> (Ann.ivfTopK(spark, _)),
+    "pqTopK" -> (Ann.pqTopK(spark, _)),
+    "ivfPqTopK" -> (Ann.ivfPqTopK(spark, _))
+  ).foreach { case (name, topK) =>
+    test(s"$name fails on an empty embeddings table, naming it") {
+      val e = intercept[IllegalArgumentException](topK(emptyEmbDir).collect())
+      assert(e.getMessage.contains("the embeddings table is empty"),
+        s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("lshTopK returns no rows on an empty embeddings table") {
+    assert(Ann.lshTopK(spark, emptyEmbDir).collect().isEmpty)
+  }
+
   test("s05 PQ ADC achieves recall against the exact L2 top-k") {
     import graft.dedup.Dedup.dot
     import org.apache.spark.sql.expressions.Window

@@ -81,7 +81,33 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("no more stream state classes carry a collection field") {
+    import scala.jdk.CollectionConverters._
+    // Spark decodes an Array/Seq/List state field through MapObjects,
+    // whose lambda variable is renamed on every micro-batch's re-plan,
+    // so that state's decoder recompiles on every batch; a binary field
+    // (TickerState.diffs, FixedPoint.longAt) compiles once. Lower the
+    // bound as the remaining classes move to binary fields (an
+    // Array[Byte] field is Spark's BinaryType, not a collection).
+    val src = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(
+      "src/main/scala/graft/streaming/StreamingAnomaly.scala")).asScala
+      .mkString("\n")
+    val states = """case class (\w+State)\(([^)]*)\)""".r
+      .findAllMatchIn(src).map(m => m.group(1) -> m.group(2)).toSeq
+    assert(states.exists(_._1 == "TickerState"), states.map(_._1))
+    val withCollections = states.collect {
+      case (name, fields) if Seq("Array[", "Seq[", "List[")
+        .exists(fields.replace("Array[Byte]", "").contains) => name
+    }
+    assert(withCollections.size <= 8, withCollections.mkString(", "))
+  }
+
   private type Ev = (Long, java.sql.Timestamp, Long, String, Double)
+
+  /** The messages of `e` and its causes, one a line. */
+  private def causes(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
 
   /** `rows` (event_id, ts, user_id, event_type, value) as one
     * micro-batch of an in-memory stream.
@@ -125,9 +151,7 @@ class StreamingSpec extends AnyFunSuite {
            Double.NegativeInfinity)) {
       val rows = Seq((1L, hourTs(0), 7L, "idx", 35000.0),
         (2L, hourTs(1), 7L, "idx", bad))
-      val e = intercept[Exception](run(memEvents(rows)).collect())
-      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
-        .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+      val msgs = causes(intercept[Exception](run(memEvents(rows)).collect()))
       assert(msgs.contains(s"key (7,idx), event_id 2: value $bad is not"),
         s"$name on $bad: $msgs")
     }
@@ -155,12 +179,69 @@ class StreamingSpec extends AnyFunSuite {
     val early = new java.sql.Timestamp(-1000L)
     val rows = Seq((1L, early, 1L, "idx", 1.0),
       (2L, new java.sql.Timestamp(2L * 86400000L), 1L, "idx", 2.0))
-    val e = intercept[Exception](
-      StreamingAnomaly.st23FromStream(spark, memEvents(rows)).collect())
-    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
-      .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    val msgs = causes(intercept[Exception](
+      StreamingAnomaly.st23FromStream(spark, memEvents(rows)).collect()))
     assert(msgs.contains(s"event_id 1: event time $early is before 1970"),
       msgs)
+  }
+
+  test("st02 and st08 fail the query on an event before 1970, " +
+      "naming the event") {
+    // both fold per ticker on an event-time timeout, so Spark's first
+    // watermark (0) dropped the -1 s print as late before the fold saw
+    // it: it vanished from the output without an error
+    val early = new java.sql.Timestamp(-1000L)
+    val rows = Seq((1L, early, 7L, "idx", 35000.0),
+      (2L, hourTs(0), 7L, "idx", 35001.0))
+    for ((name, run) <- Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)](
+        "st02" -> (StreamingAnomaly.st02FromStream(spark, _)),
+        "st08" -> (StreamingAnomaly.st08FromStream(spark, _)))) {
+      val msgs = causes(intercept[Exception](run(memEvents(rows)).collect()))
+      assert(msgs.contains(s"event_id 1: event time $early is before 1970"),
+        s"$name: $msgs")
+    }
+  }
+
+  test("st02 compiles at most one class per data batch once warm") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    // one micro-batch per addData: no extra no-data batch for timeouts
+    val confs = Seq("spark.sql.streaming.noDataMicroBatches.enabled" ->
+      "false", "spark.sql.shuffle.partitions" -> "8")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val ms = MemoryStream[Ev](implicitly[org.apache.spark.sql.Encoder[Ev]],
+      spark.sqlContext)
+    val q = StreamingAnomaly.st02Transform(spark,
+        ms.toDF().toDF("event_id", "ts", "user_id", "event_type", "value"),
+        operators.AnomalyConfig(dataPeriods = 28))
+      .writeStream.format("memory").queryName("st02_codegen_probe")
+      .outputMode("append").start()
+    try {
+      // batch b: one print an hour for 20 tickers, so every key's
+      // state is decoded, advanced and encoded again
+      def compiles(b: Int): Long = {
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        ms.addData((0 until 20).map(t => (b * 20L + t, hourTs(b), t.toLong,
+          "idx", 100.0 + (b * 7 + t) % 13)))
+        q.processAllAvailable()
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      }
+      (0 until 3).foreach(compiles) // warm-up: first decode of state
+      // the one class left is the watermark filter, whose literal
+      // changes every batch
+      val warm = (3 until 7).map(compiles)
+      info(s"compiles per data batch: $warm")
+      assert(warm.forall(_ <= 1), s"compiles per data batch: $warm")
+    } finally {
+      q.stop()
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
   }
 
   test("st01 windowed agg totals match the batch count") {
@@ -350,6 +431,58 @@ class StreamingSpec extends AnyFunSuite {
       val left = new java.io.File(cancelDir.toUri).list().toSeq
       assert(left.isEmpty, s"$cls: a cancelled write left $left")
     }
+  }
+
+  test("checkpoint files and directories get the modes Hadoop's chmod " +
+      "gives them") {
+    import java.nio.file.Files
+    import java.nio.file.attribute.PosixFilePermissions.{toString => perms}
+    import org.apache.hadoop.fs.{LocalFileSystem, Path}
+    import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    val root = Files.createTempDirectory("graft_cfm_mode")
+    val hc = spark.sessionState.newHadoopConf()
+    val fm = CheckpointFileManager.create(new Path(root.toUri), hc)
+    val dir = new Path(root.toUri.toString, "state/0")
+    fm.mkdirs(dir)
+    val out = fm.createAtomic(new Path(dir, "1.delta"),
+      overwriteIfPossible = false)
+    out.write(1)
+    out.close()
+    // Hadoop's own local file system, which runs `chmod` for each
+    val stock = new LocalFileSystem
+    stock.initialize(java.net.URI.create("file:///"), hc)
+    val stockDir = new Path(root.toUri.toString, "stock/0")
+    stock.mkdirs(stockDir)
+    stock.create(new Path(stockDir, "1.delta")).close()
+    def mode(p: String) = perms(Files.getPosixFilePermissions(root.resolve(p)))
+    for ((ours, theirs, want) <- Seq(("state/0", "stock/0", "rwxr-xr-x"),
+        ("state/0/1.delta", "stock/0/1.delta", "rw-r--r--"),
+        ("state/0/.1.delta.crc", "stock/0/.1.delta.crc", "rw-r--r--")))
+      assert(mode(ours) == want && mode(theirs) == want,
+        s"$ours: ${mode(ours)}, $theirs: ${mode(theirs)}, want $want")
+  }
+
+  test("the checkpoint file system's setPermission sets the exact mode " +
+      "and fails on a missing path") {
+    import java.nio.file.Files
+    import java.nio.file.attribute.PosixFilePermissions.{toString => perms}
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.permission.FsPermission
+    val fs = new graft.streaming.GraftCheckpointFileManager.NioPermissions
+    fs.initialize(java.net.URI.create("file:///"),
+      spark.sessionState.newHadoopConf())
+    val root = Files.createTempDirectory("graft_cfm_perm")
+    val file = Files.createFile(root.resolve("f"))
+    val sub = Files.createDirectory(root.resolve("d"))
+    for ((p, octal, want) <- Seq((file, "600", "rw-------"),
+        (file, "750", "rwxr-x---"), (sub, "750", "rwxr-x---"),
+        (sub, "600", "rw-------"))) {
+      fs.setPermission(new Path(p.toUri),
+        new FsPermission(Integer.parseInt(octal, 8).toShort))
+      assert(perms(Files.getPosixFilePermissions(p)) == want, s"$p $octal")
+    }
+    intercept[java.io.IOException](fs.setPermission(
+      new Path(root.resolve("missing").toUri), new FsPermission("644")))
   }
 
   test("st02 resumes exactly once across a switch of checkpoint manager " +
